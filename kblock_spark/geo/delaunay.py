@@ -462,11 +462,3 @@ def _expand_edges(uedges: set[tuple[int, int]], inv: np.ndarray) -> set[tuple[in
         for x in range(len(members) - 1):
             out.add((members[x], members[x + 1]))
     return out
-
-
-def adjacency_lists(n: int, edges: set[tuple[int, int]]) -> list[list[int]]:
-    adj: list[list[int]] = [[] for _ in range(n)]
-    for a, b in edges:
-        adj[a].append(b)
-        adj[b].append(a)
-    return adj

@@ -120,20 +120,6 @@ def points_in_polygon(
 
 # ----------------------------------------------------------- distances
 
-def point_segments_dist(
-    px: float, py: float, a: np.ndarray, b: np.ndarray
-) -> np.ndarray:
-    """Distance from one point to each segment (a[i] → b[i])."""
-    ab = b - a
-    ap = np.array([px, py]) - a
-    denom = (ab * ab).sum(axis=1)
-    t = np.where(denom > 0, (ap * ab).sum(axis=1) / np.maximum(denom, EPS), 0.0)
-    t = np.clip(t, 0.0, 1.0)
-    proj = a + t[:, None] * ab
-    d = proj - np.array([px, py])
-    return np.sqrt((d * d).sum(axis=1))
-
-
 def points_to_segments_mindist(
     px: np.ndarray, py: np.ndarray, a: np.ndarray, b: np.ndarray
 ) -> np.ndarray:
@@ -260,40 +246,12 @@ def segments_pairs_within(
     return np.concatenate(iis), np.concatenate(jjs)
 
 
-def segments_min_dist(a1, b1, a2, b2) -> float:
-    """Min distance between two segments."""
-    if segments_intersect(a1, b1, a2, b2):
-        return 0.0
-    return min(
-        point_segments_dist(a1[0], a1[1], a2[None, :], b2[None, :])[0],
-        point_segments_dist(b1[0], b1[1], a2[None, :], b2[None, :])[0],
-        point_segments_dist(a2[0], a2[1], a1[None, :], b1[None, :])[0],
-        point_segments_dist(b2[0], b2[1], a1[None, :], b1[None, :])[0],
-    )
-
-
 # --------------------------------------------------- segment intersection
 
 def _cross(o, a, b):
     return (a[..., 0] - o[..., 0]) * (b[..., 1] - o[..., 1]) - (
         a[..., 1] - o[..., 1]
     ) * (b[..., 0] - o[..., 0])
-
-
-def segments_intersect(a1, b1, a2, b2) -> bool:
-    d1 = _cross(a2, b2, a1)
-    d2 = _cross(a2, b2, b1)
-    d3 = _cross(a1, b1, a2)
-    d4 = _cross(a1, b1, b2)
-    if ((d1 > 0) != (d2 > 0)) and ((d3 > 0) != (d4 > 0)):
-        return True
-    def on(p, q, r):
-        return (
-            abs(_cross(p, q, r)) < EPS
-            and min(p[0], q[0]) - EPS <= r[0] <= max(p[0], q[0]) + EPS
-            and min(p[1], q[1]) - EPS <= r[1] <= max(p[1], q[1]) + EPS
-        )
-    return on(a1, b1, a2) or on(a1, b1, b2) or on(a2, b2, a1) or on(a2, b2, b1)
 
 
 def segment_intersection_params(a1, b1, a2, b2):
@@ -406,23 +364,6 @@ def clip_polyline_to_polygon(
         if keep_i:
             out.append(np.vstack([p + t0 * r, p + t1 * r]))
     return out
-
-
-# ----------------------------------------------------- polyline sampling
-
-def sample_polyline(line: np.ndarray, step: float) -> np.ndarray:
-    """Points along a polyline every ``step`` units (incl. endpoints)."""
-    if len(line) < 2:
-        return line.copy()
-    out = [line[0]]
-    for i in range(len(line) - 1):
-        p, q = line[i], line[i + 1]
-        seg = np.sqrt(((q - p) ** 2).sum())
-        n = int(seg // step)
-        for k in range(1, n + 1):
-            out.append(p + (k * step / seg) * (q - p))
-        out.append(q)
-    return np.unique(np.asarray(out), axis=0)
 
 
 # ------------------------------------------------------------ hulls

@@ -29,16 +29,15 @@ Reimplements the reference's ``compute_k``
   shrink-by-0.9999 boundary-ring fallback (batch_4:157-168).
 - ``bldg_count ∈ {0, 1}`` → k = 1 (batch_4:179-181).
 
-Runs as ``cogroup(buildings_with_block_geom, streets_near_block)
-.applyInPandas`` keyed by block_id — one shuffle, then embarrassingly
-parallel across blocks, replacing the reference's multiprocessing pool
-(batch_4:576-577).
+:func:`compute_k_block` runs inside the packed-block ``mapInPandas``
+kernels of :mod:`kblock_spark.pipeline` — one row per block, placed by
+cost, embarrassingly parallel across blocks, replacing the reference's
+multiprocessing pool (batch_4:576-577).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from ..geo.delaunay import delaunay_edges
 from ..geo.geom import (
@@ -47,7 +46,6 @@ from ..geo.geom import (
     polyline_length,
     segments_mindist_rowmin,
     segments_pairs_within,
-    unpack_rings,
 )
 from ..geo.mercator import lonlat_to_mercator
 
@@ -513,82 +511,3 @@ def _peel_layers(
 
 
 LAYERS_SCHEMA = "block_id string, url string, layer int, k_complexity int"
-
-
-def compute_layers_kernel(
-    key, bldg_pdf: pd.DataFrame, street_pdf: pd.DataFrame
-) -> pd.DataFrame:
-    """Grouped-map UDTF-style kernel: one block group → one row per
-    building with its concentric layer index (the reference's
-    compute_layers rendering variant, batch_4:190-375 — here emitting
-    parcel→layer membership instead of per-layer geometry)."""
-    if len(bldg_pdf) == 0:
-        return pd.DataFrame(columns=["block_id", "url", "layer", "k_complexity"])
-    block_id = key[0]
-    is_geom = bldg_pdf["lon"].isna()
-    geom_rows = bldg_pdf.loc[is_geom]
-    if len(geom_rows) == 0:
-        return pd.DataFrame(columns=["block_id", "url", "layer", "k_complexity"])
-    shell, holes = unpack_rings(
-        geom_rows["ring_sizes"].iloc[0], geom_rows["coords"].iloc[0]
-    )
-    bldg = bldg_pdf.loc[~is_geom]
-    if len(bldg) == 0:
-        return pd.DataFrame(columns=["block_id", "url", "layer", "k_complexity"])
-    pts = np.stack(
-        [bldg["lon"].to_numpy(np.float64), bldg["lat"].to_numpy(np.float64)], axis=1
-    )
-    lines = [
-        np.asarray(c, dtype=np.float64).reshape(-1, 2)
-        for c in street_pdf.get("s_coords", pd.Series(dtype=object))
-    ]
-    row = compute_k_block(shell, holes, pts, lines)
-    return pd.DataFrame(
-        {
-            "block_id": block_id,
-            "url": bldg["url"].to_numpy(),
-            "layer": row["layer_assignment"].astype(np.int32),
-            "k_complexity": np.int32(row["k_complexity"]),
-        }
-    )
-
-
-def compute_k_kernel(key, bldg_pdf: pd.DataFrame, street_pdf: pd.DataFrame) -> pd.DataFrame:
-    """Grouped-map wrapper: one block group → one row."""
-    if len(bldg_pdf) == 0:
-        return pd.DataFrame(columns=K_COLUMNS)
-    import os
-    import time
-
-    t0 = time.time()
-    block_id = key[0]
-    # geometry marker rows have null lon/lat; building rows null geom
-    is_geom = bldg_pdf["lon"].isna()
-    geom_rows = bldg_pdf.loc[is_geom]
-    if len(geom_rows) == 0:
-        return pd.DataFrame(columns=K_COLUMNS)
-    sizes = geom_rows["ring_sizes"].iloc[0]
-    coords = geom_rows["coords"].iloc[0]
-    shell, holes = unpack_rings(sizes, coords)
-    bldg_pdf = bldg_pdf.loc[~is_geom]
-    pts = np.stack(
-        [bldg_pdf["lon"].to_numpy(np.float64), bldg_pdf["lat"].to_numpy(np.float64)],
-        axis=1,
-    ) if len(bldg_pdf) else np.zeros((0, 2))
-    lines = [
-        np.asarray(c, dtype=np.float64).reshape(-1, 2)
-        for c in street_pdf.get("s_coords", pd.Series(dtype=object))
-    ]
-    row = compute_k_block(shell, holes, pts, lines)
-    row["block_id"] = block_id
-    # per-partition kernel metrics (north rule: per-partition lineage +
-    # metrics). Opt-in via env: one CSV per python worker.
-    mdir = os.environ.get("KBLOCK_KERNEL_METRICS")
-    if mdir:
-        os.makedirs(mdir, exist_ok=True)
-        with open(f"{mdir}/{os.getpid()}.csv", "a") as f:
-            f.write(
-                f"{block_id},{len(pts)},{len(lines)},"
-                f"{int((time.time() - t0) * 1000)}\n"
-            )
-    return pd.DataFrame([row])[K_COLUMNS]

@@ -1,20 +1,19 @@
-"""Vectorized text-extraction + geocoding UDFs over the pages table.
+"""Vectorized text extraction + geocoding over the pages table.
 
 input_hint contract: ``extract_text(html)`` must be deterministic and
 byte-identical per url; geocoding pulls the ``geo:lat,lon`` token out
-of ``text``. Both are Arrow-batched pandas UDFs using pandas string
-kernels — no per-row Python in the plan.
+of ``text``. Extraction is an Arrow-batched pandas UDF; geocoding and
+the cell id are Catalyst expressions — no per-row Python in the plan.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType, StringType
+from pyspark.sql.types import StringType
 
-from ..geo.tiling import DEFAULT_CELL_DEG, cell_of, geohash_encode
+from ..geo.tiling import DEFAULT_CELL_DEG, cell_expr
 
 _BODY_OPEN = b"<body>"
 _BODY_CLOSE = b"</body>"
@@ -54,40 +53,12 @@ def with_geocode(df, text_col: str = "text"):
     )
 
 
-@pandas_udf(LongType())
-def cell_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    """lon/lat → grid cell id (H3-level-9-like tile)."""
-    return pd.Series(cell_of(lon.to_numpy(), lat.to_numpy(), DEFAULT_CELL_DEG))
-
-
-def make_cell_udf(cell_deg: float):
-    @pandas_udf(LongType())
-    def _cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(cell_of(lon.to_numpy(), lat.to_numpy(), cell_deg))
-
-    return _cell
-
-
-@pandas_udf(StringType())
-def geohash_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    """Precision-12 geohash (reference uses pygeohash at precision 18
-    for sort keys, kblock/batch_1b_generate_blocks.py:235-236; 12 is
-    ~3.7 cm — already far below coordinate noise)."""
-    return pd.Series(geohash_encode(lon.to_numpy(), lat.to_numpy(), 12))
-
-
-def geocoded_points(
-    pages_df, cell_deg: float = DEFAULT_CELL_DEG, with_geohash: bool = False
-):
-    """pages → building-point table (url, lat, lon, cell
-    [, point_geohash]). The kblock 'buildings' role (SURVEY.md §1:
-    geocoded pages play building points). The geohash sort key is
-    opt-in — the pipeline's spatial index is the grid cell; geohash is
-    only needed for reference-schema parity outputs."""
+def geocoded_points(pages_df, cell_deg: float = DEFAULT_CELL_DEG):
+    """pages → building-point table (url, lat, lon, cell). The kblock
+    'buildings' role (SURVEY.md §1: geocoded pages play building
+    points); the cell id is a Catalyst expression, so the fact table
+    never crosses into Python here."""
     df = with_geocode(pages_df).where(F.col("lat").isNotNull() & F.col("lon").isNotNull())
-    out = df.select("url", "lat", "lon").withColumn(
-        "cell", make_cell_udf(cell_deg)(F.col("lon"), F.col("lat"))
+    return df.select("url", "lat", "lon").withColumn(
+        "cell", cell_expr(F.col("lon"), F.col("lat"), cell_deg)
     )
-    if with_geohash:
-        out = out.withColumn("point_geohash", geohash_udf(F.col("lon"), F.col("lat")))
-    return out

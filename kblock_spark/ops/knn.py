@@ -16,39 +16,9 @@ geodesic inside the same loop structure.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
 
-from ..geo.tiling import DEFAULT_CELL_DEG
-
-
-def _ring_cells_udf(r_lo: int, r_hi: int):
-    """Cells with Chebyshev distance in (r_lo, r_hi] of each input
-    cell (r_lo = -1 includes the center)."""
-
-    @pandas_udf(ArrayType(LongType()))
-    def ring(cell: pd.Series) -> pd.Series:
-        c = cell.to_numpy(np.int64)
-        ix = c >> np.int64(32)
-        iy = c & np.int64(0xFFFFFFFF)
-        offs = [
-            (dx, dy)
-            for dx in range(-r_hi, r_hi + 1)
-            for dy in range(-r_hi, r_hi + 1)
-            if r_lo < max(abs(dx), abs(dy)) <= r_hi or (r_lo < 0 and dx == dy == 0)
-        ]
-        out = []
-        arr = np.array(offs, dtype=np.int64)
-        for i in range(len(c)):
-            out.append(
-                (((ix[i] + arr[:, 0]) << np.int64(32)) | (iy[i] + arr[:, 1])).tolist()
-            )
-        return pd.Series(out)
-
-    return ring
+from ..geo.tiling import DEFAULT_CELL_DEG, ring_cells_expr
 
 
 def knn_join(
@@ -88,10 +58,10 @@ def knn_join(
         radii.append(max_rings)
     prev_r = -1
     for r in radii:
-        ring = _ring_cells_udf(prev_r, r)
+        ring = ring_cells_expr(F.col("cell"), r, prev_r)
         prev_r = r
         cand = (
-            unresolved.withColumn("jcell", F.explode(ring("cell")))
+            unresolved.withColumn("jcell", F.explode(ring))
             .join(r_side, F.col("jcell") == F.col("r_cell"), "inner")
             # explicit x*x (not **2 → Math.pow, which is only 1-ulp
             # accurate): keeps the distance bit-identical to any IEEE

@@ -27,54 +27,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import DoubleType
 
 from ..geo.geom import box_polygon_overlap_area, unpack_rings
-from ..geo.tiling import DEFAULT_CELL_DEG, cells_covering_bbox
+from ..geo.tiling import DEFAULT_CELL_DEG, box_cells_expr, cell_expr
 from .spatial_join import polygon_side_fits_broadcast, polygons_with_cells
-
-
-def make_box_cells_udf(cell_deg: float = DEFAULT_CELL_DEG):
-    @pandas_udf(ArrayType(LongType()))
-    def box_cells(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-        out = []
-        for x0, y0, x1, y1 in zip(xmin, ymin, xmax, ymax):
-            out.append(cells_covering_bbox(x0, y0, x1, y1, cell_deg).tolist())
-        return pd.Series(out)
-
-    return box_cells
-
-
-def _cell_expr(lon, lat, cell_deg: float) -> F.Column:
-    """Catalyst twin of geo.tiling.cell_of: floor-index the grid and
-    pack (ix<<32)|iy. Bit-identical to the numpy path (same double
-    division, same IEEE floor, iy ≥ 0 for valid latitudes so OR ==
-    add) — but pure JVM, so the hot point-in-box stage never crosses
-    the Python boundary (guide §4.1)."""
-    ix = F.floor((lon + F.lit(180.0)) / F.lit(float(cell_deg)))
-    iy = F.floor((lat + F.lit(90.0)) / F.lit(float(cell_deg)))
-    return F.shiftleft(ix, 32).bitwiseOR(iy)
-
-
-def _box_cells_expr(xmin, ymin, xmax, ymax, cell_deg: float) -> F.Column:
-    """Catalyst twin of cells_covering_bbox: all cell ids whose tile
-    intersects the box, as nested sequence/transform — same SET of
-    cells as the numpy meshgrid (order differs; every consumer is an
-    order-insensitive join/aggregate)."""
-    c = F.lit(float(cell_deg))
-    ix0 = F.floor((xmin + F.lit(180.0)) / c)
-    ix1 = F.floor((xmax + F.lit(180.0)) / c)
-    iy0 = F.floor((ymin + F.lit(90.0)) / c)
-    iy1 = F.floor((ymax + F.lit(90.0)) / c)
-    return F.flatten(
-        F.transform(
-            F.sequence(ix0, ix1),
-            lambda ix: F.transform(
-                F.sequence(iy0, iy1),
-                lambda iy: F.shiftleft(ix, 32).bitwiseOR(iy),
-            ),
-        )
-    )
 
 
 def _overlap_area_udf():
@@ -127,7 +84,7 @@ def allocate_population(
     if "gadm_code" in pixels.columns:
         pixels = pixels.withColumnRenamed("gadm_code", "__px_gadm")
     # cell ids as pure Catalyst expressions (bit-identical to the
-    # numpy tiling, see _cell_expr): stages 1-2's candidate
+    # numpy tiling, see geo.tiling.cell_expr): stages 1-2's candidate
     # generation runs entirely in the JVM — the former pandas UDFs
     # made the hot join stage hostage to python-worker churn
     # (measured: a 3× slow mode when the worker pool was cold/evicted
@@ -135,7 +92,7 @@ def allocate_population(
     px = pixels.withColumn(
         "cell",
         F.explode(
-            _box_cells_expr(
+            box_cells_expr(
                 F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
                 cell_deg,
             )
@@ -144,7 +101,7 @@ def allocate_population(
 
     # ---- stage 1: pixel ⋈ buildings (point-in-box via cell equi-join)
     b = buildings.select("block_id", "gadm_code", "lon", "lat", "building_area")
-    b = b.withColumn("cell", _cell_expr(F.col("lon"), F.col("lat"), cell_deg))
+    b = b.withColumn("cell", cell_expr(F.col("lon"), F.col("lat"), cell_deg))
     pb = px.join(b, "cell", "inner").where(
         (F.col("lon") >= F.col("xmin")) & (F.col("lon") < F.col("xmax"))
         & (F.col("lat") >= F.col("ymin")) & (F.col("lat") < F.col("ymax"))
@@ -178,7 +135,7 @@ def allocate_population(
     rpx = resid.withColumn(
         "cell",
         F.explode(
-            _box_cells_expr(
+            box_cells_expr(
                 F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
                 cell_deg,
             )

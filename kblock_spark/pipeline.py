@@ -16,8 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
-from .geo.geom import sample_polyline
-from .geo.tiling import DEFAULT_CELL_DEG, cell_of, expand_cells
+from .geo.tiling import DEFAULT_CELL_DEG, cells_covering_line, ring_cells_expr
 from .io.synth import synth_admin, synth_pages_spark, synth_streets
 from .kernels.blocks import delineate_blocks
 from .kernels.complexity import K_SCHEMA
@@ -26,17 +25,14 @@ from .ops.spatial_join import assign_points_to_polygons, make_covering_cells_udf
 
 
 def make_line_cells_udf(cell_deg: float = DEFAULT_CELL_DEG):
-    """Street line → cells it passes through (sampled at half-cell
-    step; the line-side analogue of polygon covering)."""
+    """Street line → the cells it passes through (exact traversal; the
+    line-side analogue of polygon covering)."""
 
     @pandas_udf(ArrayType(LongType()))
     def line_cells(coords: pd.Series) -> pd.Series:
-        out = []
-        for c in coords:
-            line = np.asarray(c, dtype=np.float64).reshape(-1, 2)
-            samp = sample_polyline(line, cell_deg / 2.0)
-            out.append(np.unique(cell_of(samp[:, 0], samp[:, 1], cell_deg)).tolist())
-        return pd.Series(out)
+        return pd.Series(
+            [cells_covering_line(c, cell_deg).tolist() for c in coords]
+        )
 
     return line_cells
 
@@ -54,16 +50,9 @@ def streets_near_blocks(
         .withColumn("cell", F.explode(lc("coords")))
         .select("street_id", "cell", F.col("coords").alias("s_coords"))
     )
-    cov = make_covering_cells_udf(cell_deg)
-
-    @pandas_udf(ArrayType(LongType()))
-    def expanded(ring_sizes: pd.Series, coords: pd.Series) -> pd.Series:
-        base = cov.func(ring_sizes, coords)
-        return base.map(lambda cs: expand_cells(np.asarray(cs, dtype=np.int64), 1).tolist())
-
-    b_cells = blocks.select(
-        "block_id", F.explode(expanded("ring_sizes", "coords")).alias("cell")
-    )
+    cov = make_covering_cells_udf(cell_deg)("ring_sizes", "coords")
+    near = F.array_distinct(F.flatten(F.transform(cov, lambda c: ring_cells_expr(c, 1))))
+    b_cells = blocks.select("block_id", F.explode(near).alias("cell"))
     pairs = (
         b_cells.join(s_cells, "cell", "inner")
         .select("block_id", "street_id")
@@ -146,10 +135,33 @@ def _pack_blocks(
     return packed.join(tok, "block_id").repartition(nparts, "__part_token")
 
 
-def _unpack_streets(street_lines) -> list[np.ndarray]:
-    if street_lines is None:
-        return []
-    return [np.asarray(c, dtype=np.float64).reshape(-1, 2) for c in street_lines]
+def _unpacked_blocks(pdf: pd.DataFrame):
+    """Packed block rows → (row, shell, holes, points, street lines,
+    point order) per block. Points come in one canonical order:
+    collect_list order depends on the upstream join/dedupe plan, and
+    the kernel's float sums (centroid, layer peel seeds) are
+    association-order sensitive — lexsort makes every join strategy
+    (broadcast / salted shuffle / local dedupe) bit-identical."""
+    from .geo.geom import unpack_rings
+
+    for row in pdf.itertuples(index=False):
+        shell, holes = unpack_rings(row.ring_sizes, row.coords)
+        if row.b_lons is not None and len(row.b_lons):
+            pts = np.stack(
+                [
+                    np.asarray(row.b_lons, dtype=np.float64),
+                    np.asarray(row.b_lats, dtype=np.float64),
+                ],
+                axis=1,
+            )
+        else:
+            pts = np.zeros((0, 2))
+        order = np.lexsort((pts[:, 1], pts[:, 0]))
+        lines = [
+            np.asarray(c, dtype=np.float64).reshape(-1, 2)
+            for c in (row.street_lines if row.street_lines is not None else [])
+        ]
+        yield row, shell, holes, pts[order], lines, order
 
 
 def _packed_k_iter(batches):
@@ -158,57 +170,16 @@ def _packed_k_iter(batches):
     building_count=0 — the reference computes k only for blocks with
     buildings, batch_4:466-506, and fills the rest in the combine
     stage; here the n=0 path also yields their true street lengths)."""
-    import os
-    import time
-
     from .kernels.complexity import K_COLUMNS, compute_k_block
-    from .geo.geom import unpack_rings
 
-    mdir = os.environ.get("KBLOCK_KERNEL_METRICS")
     for pdf in batches:
         rows = []
-        for block_id, sizes, coords, b_lons, b_lats, street_lines in zip(
-            pdf["block_id"], pdf["ring_sizes"], pdf["coords"],
-            pdf["b_lons"], pdf["b_lats"], pdf["street_lines"],
-        ):
-            t0 = time.time()
-            shell, holes = unpack_rings(sizes, coords)
-            pts = (
-                np.stack(
-                    [
-                        np.asarray(b_lons, dtype=np.float64),
-                        np.asarray(b_lats, dtype=np.float64),
-                    ],
-                    axis=1,
-                )
-                if b_lons is not None and len(b_lons)
-                else np.zeros((0, 2))
-            )
-            # canonical point order: collect_list order depends on the
-            # upstream join/dedupe plan, and the kernel's float sums
-            # (centroid, layer peel seeds) are association-order
-            # sensitive — lexsort makes every join strategy
-            # (broadcast / salted shuffle / local dedupe) bit-identical
-            pts = pts[np.lexsort((pts[:, 1], pts[:, 0]))]
-            lines = _unpack_streets(street_lines)
-            row = compute_k_block(shell, holes, pts, lines)
-            row["block_id"] = block_id
-            rows.append(row)
-            if mdir:
-                os.makedirs(mdir, exist_ok=True)
-                with open(f"{mdir}/{os.getpid()}.csv", "a") as f:
-                    f.write(
-                        f"{block_id},{len(pts)},{len(lines)},"
-                        f"{int((time.time() - t0) * 1000)}\n"
-                    )
+        for row, shell, holes, pts, lines, _ in _unpacked_blocks(pdf):
+            k = compute_k_block(shell, holes, pts, lines)
+            k["block_id"] = row.block_id
+            rows.append(k)
         if rows:
-            yield pd.DataFrame(rows)[
-                [
-                    "block_id", "on_network_street_length",
-                    "off_network_street_length", "nearest_external_street",
-                    "building_count", "building_layers", "k_complexity",
-                ]
-            ]
+            yield pd.DataFrame(rows)[K_COLUMNS]
 
 
 def compute_k(
@@ -237,38 +208,20 @@ def compute_k(
 
 def _packed_layers_iter(batches):
     from .kernels.complexity import compute_k_block
-    from .geo.geom import unpack_rings
 
     for pdf in batches:
         outs = []
-        for block_id, sizes, coords, b_lons, b_lats, urls, street_lines in zip(
-            pdf["block_id"], pdf["ring_sizes"], pdf["coords"],
-            pdf["b_lons"], pdf["b_lats"], pdf["b_urls"], pdf["street_lines"],
-        ):
-            if b_lons is None or len(b_lons) == 0:
+        for row, shell, holes, pts, lines, order in _unpacked_blocks(pdf):
+            if len(pts) == 0:
                 continue
-            shell, holes = unpack_rings(sizes, coords)
-            pts = np.stack(
-                [
-                    np.asarray(b_lons, dtype=np.float64),
-                    np.asarray(b_lats, dtype=np.float64),
-                ],
-                axis=1,
-            )
-            # same canonical order as _packed_k_iter, with urls
-            # permuted alongside their points
-            order = np.lexsort((pts[:, 1], pts[:, 0]))
-            pts = pts[order]
-            urls = np.asarray(urls, dtype=object)[order]
-            lines = _unpack_streets(street_lines)
-            row = compute_k_block(shell, holes, pts, lines)
+            k = compute_k_block(shell, holes, pts, lines)
             outs.append(
                 pd.DataFrame(
                     {
-                        "block_id": block_id,
-                        "url": np.asarray(urls, dtype=object),
-                        "layer": row["layer_assignment"].astype(np.int32),
-                        "k_complexity": np.int32(row["k_complexity"]),
+                        "block_id": row.block_id,
+                        "url": np.asarray(row.b_urls, dtype=object)[order],
+                        "layer": k["layer_assignment"].astype(np.int32),
+                        "k_complexity": np.int32(k["k_complexity"]),
                     }
                 )
             )

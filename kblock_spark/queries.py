@@ -1143,7 +1143,8 @@ def _trigram_zip(toks):
     ).otherwise(F.array().cast("array<struct<a:string,b:string,c:string>>"))
 
 
-def _zip_shingle_str(z) -> F.Column:
+def _zip_shingle_str(z: str) -> F.Column:
+    """Space-joined a/b/c fields of the zipped struct column named ``z``."""
     return F.concat_ws(
         " ", F.col(f"{z}.a"), F.col(f"{z}.b"), F.col(f"{z}.c")
     )

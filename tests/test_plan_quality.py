@@ -255,3 +255,53 @@ def test_d25_fuzzy_pipeline_no_cartesian(spark):
     plan = _plan(d25_fuzzy_corpus_pipeline(spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+_PYTHON_EVAL = ("ArrowEvalPython", "BatchEvalPython")
+
+
+def test_cell_ids_are_catalyst(spark):
+    """Geocoding, the street⨝admin pair join of block delineation and
+    the kNN ring rounds compute cell ids as Catalyst expressions: no
+    Python eval node in their executed plans."""
+    import numpy as np
+    import pandas as pd
+
+    from kblock_spark.geo.tiling import cell_of
+    from kblock_spark.io.synth import synth_admin, synth_pages_spark, synth_streets
+    from kblock_spark.kernels.blocks import delineate_blocks
+    from kblock_spark.kernels.extract import geocoded_points
+    from kblock_spark.ops.knn import knn_join
+
+    plan = _plan(geocoded_points(synth_pages_spark(spark, 200), 0.003))
+    assert not any(n in plan for n in _PYTHON_EVAL), plan
+    admin = spark.createDataFrame(synth_admin(2, 2))
+    streets = spark.createDataFrame(synth_streets(2, 2, 2))
+    plan = _plan(delineate_blocks(admin, streets))
+    assert not any(n in plan for n in _PYTHON_EVAL), plan
+
+    # knn_join checkpoints every ring round, so read the plans of the
+    # SQL executions it ran from the status store
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        it = store.executionsList().iterator()
+        while it.hasNext():
+            e = it.next()
+            yield e.executionId(), e.physicalPlanDescription()
+
+    seen = max((i for i, _ in executions()), default=-1)
+    rng = np.random.default_rng(2)
+
+    def side(key, n):
+        lon, lat = rng.uniform(10, 10.05, n), rng.uniform(0, 0.05, n)
+        return spark.createDataFrame(
+            pd.DataFrame({key: np.arange(n), "lon": lon, "lat": lat,
+                          "cell": cell_of(lon, lat)})
+        )
+
+    assert len(knn_join(side("a", 40), side("b", 60), "a", "b", k=2).collect()) == 80
+    plans = [p for i, p in executions() if i > seen]
+    assert any("Generate" in p for p in plans)  # the ring explode ran
+    for p in plans:
+        assert not any(n in p for n in _PYTHON_EVAL), p

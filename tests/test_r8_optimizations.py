@@ -3,8 +3,8 @@
 - append_snapshots_split must be commit-for-commit equivalent to N
   separate append_snapshot calls (chain shape, manifests, visible
   rows, per-snapshot deltas).
-- The Catalyst cell expressions introduced in ops/population.py must
-  be bit-identical to the numpy tiling they replaced (cell_of /
+- The Catalyst cell expressions in geo/tiling.py must be
+  bit-identical to their numpy twins (cell_of /
   cells_covering_bbox), including on negative coordinates and
   cell-boundary-adjacent values.
 """
@@ -12,7 +12,12 @@
 import numpy as np
 from pyspark.sql import functions as F
 
-from kblock_spark.geo.tiling import cell_of, cells_covering_bbox
+from kblock_spark.geo.tiling import (
+    box_cells_expr,
+    cell_expr,
+    cell_of,
+    cells_covering_bbox,
+)
 from kblock_spark.io.tableformat import (
     append_snapshot,
     append_snapshots_split,
@@ -31,7 +36,6 @@ def snapshot_chain(path):
         out.append(sid)
         sid = read_manifest(path, sid).get("parent_id")
     return list(reversed(out))
-from kblock_spark.ops.population import _box_cells_expr, _cell_expr
 
 
 def _docs(spark, n=60):
@@ -114,7 +118,7 @@ def test_cell_expr_matches_numpy(spark):
 
     df = spark.createDataFrame(pd.DataFrame({"lon": lons, "lat": lats}))
     got = (
-        df.select(_cell_expr(F.col("lon"), F.col("lat"), cell_deg).alias("c"))
+        df.select(cell_expr(F.col("lon"), F.col("lat"), cell_deg).alias("c"))
         .toPandas()["c"]
         .to_numpy()
     )
@@ -136,7 +140,7 @@ def test_box_cells_expr_matches_numpy(spark):
              (0.0015, 0.0015, 0.0015, 0.0015)]
     df = spark.createDataFrame(rows, "xmin double, ymin double, xmax double, ymax double")
     got = df.select(
-        _box_cells_expr(
+        box_cells_expr(
             F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
             cell_deg,
         ).alias("cells")

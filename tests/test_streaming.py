@@ -7,7 +7,8 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from kblock_spark.io.synth import _make_pages_pdf
-from kblock_spark.kernels.extract import make_cell_udf, with_geocode
+from kblock_spark.geo.tiling import cell_expr
+from kblock_spark.kernels.extract import with_geocode
 from kblock_spark.streaming import (
     read_pages_stream,
     run_stream_to_parquet,
@@ -20,7 +21,7 @@ WATERMARK = "2 minutes"
 
 def _batch_rollup(spark, pages_df):
     pts = with_geocode(pages_df).where(F.col("lat").isNotNull())
-    pts = pts.withColumn("cell", make_cell_udf(0.003)(F.col("lon"), F.col("lat")))
+    pts = pts.withColumn("cell", cell_expr(F.col("lon"), F.col("lat"), 0.003))
     return (
         pts.groupBy(F.window("warc_ts", WINDOW).alias("w"), "cell")
         .agg(
