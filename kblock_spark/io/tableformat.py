@@ -33,9 +33,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
+from typing import NamedTuple
 from urllib.parse import unquote
 
 import pyarrow.parquet as pq
@@ -336,6 +338,25 @@ def _partition_expr(df: DataFrame, spec: list[dict]):
     return out, names
 
 
+def _data_path(path: str, rel: str) -> str:
+    """Absolute path of a table-relative manifest path. Spark resolves
+    a relative path against the JVM's working directory, fixed when
+    the JVM started; this module's metadata I/O resolves it against
+    the process's current one. Every path handed to Spark is absolute,
+    so both always name the same file."""
+    return os.path.abspath(os.path.join(path, rel))
+
+
+def _rel_path(path: str, file_path: str) -> str:
+    """Table-relative manifest path of a data file as Spark names it in
+    ``_metadata.file_path``: a percent-encoded ``file:`` URI whose exact
+    shape (file:/x vs file:///x) is not contractual. The inverse of
+    :func:`_data_path`, for relative and absolute table paths alike."""
+    if file_path.startswith("file:"):
+        file_path = "/" + unquote(file_path[5:]).lstrip("/")
+    return os.path.relpath(file_path, path)
+
+
 def _write_data_files(
     df: DataFrame,
     path: str,
@@ -349,7 +370,7 @@ def _write_data_files(
     partition spec the write is hive-laid-out by the transform copies
     and every entry records its partition tuple + spec id (Iceberg:
     each data file is tagged with the spec it was written under)."""
-    sub = os.path.join(path, "data", uuid.uuid4().hex)
+    sub = _data_path(path, os.path.join("data", uuid.uuid4().hex))
     if spec:
         pdf, pnames = _partition_expr(df, spec)
         pdf.write.mode("overwrite").partitionBy(*pnames).parquet(sub)
@@ -424,35 +445,49 @@ def append_snapshot(
         spec_id = int(m0.get("spec_id") or 0)
     stat_cols = stat_cols or []
     new = _write_data_files(df, path, stat_cols, spec=spec, spec_id=spec_id)
+    return _commit_append(
+        path, new, schema, stat_cols, ref, commit_retries,
+        spec=spec, spec_id=spec_id, batch_id=batch_id,
+    )
+
+
+def _commit_append(
+    path: str,
+    new: list[dict],
+    schema: str,
+    stat_cols: list[str],
+    ref: str,
+    commit_retries: int,
+    spec: list[dict] | None = None,
+    spec_id: int = 0,
+    batch_id: int | None = None,
+) -> int:
+    """Commit already-written data files ``new`` as an APPEND snapshot
+    on ``ref``: the head's files plus ``new``, re-read on every retry
+    so a lost race re-bases metadata only."""
     for attempt in range(commit_retries + 1):
         parent = ref_head(path, ref)
-        base: list[dict] = []
-        dels: list[dict] = []
-        evolved = False
-        if parent is not None:
-            m = read_manifest(path, parent)
-            base = m["files"]
-            # position deletes survive appends: they address explicit
-            # immutable files, so they can't hit the new rows
-            dels = m.get("delete_files") or []
-            # a schema change (e.g. added column) marks the chain
-            # evolved: readers then merge footers so old files surface
-            # the new columns as NULL (Iceberg add-column semantics)
-            evolved = bool(m.get("schema_evolved")) or m.get("schema") != schema
+        m = read_manifest(path, parent) if parent is not None else {}
         manifest = {
             "operation": "append",
             "schema": schema,
             "stat_cols": stat_cols,
-            "schema_evolved": evolved,
-            "files": base + new,
+            # a schema change (e.g. added column) marks the chain
+            # evolved: readers then merge footers so old files surface
+            # the new columns as NULL (Iceberg add-column semantics)
+            "schema_evolved": parent is not None
+            and (bool(m.get("schema_evolved")) or m.get("schema") != schema),
+            "files": (m.get("files") or []) + new,
             "added": [e["path"] for e in new],
         }
-        if dels:
-            manifest["delete_files"] = dels
+        # position deletes survive appends: they address explicit
+        # immutable files, so they can't hit the new rows
+        if m.get("delete_files"):
+            manifest["delete_files"] = m["delete_files"]
         if spec:
             manifest["spec"] = spec
             manifest["spec_id"] = spec_id
-        elif parent is not None and m.get("spec_id"):
+        elif m.get("spec_id"):
             # spec was reverted to unpartitioned: keep the id counter
             manifest["spec_id"] = m["spec_id"]
         if batch_id is not None:
@@ -495,50 +530,25 @@ def append_snapshots_split(
             stat_cols = hm.get("stat_cols")
     stat_cols = stat_cols or []
     schema = df.drop(split_col).schema.simpleString()
-    sub = os.path.join(path, "data", uuid.uuid4().hex)
+    sub = _data_path(path, os.path.join("data", uuid.uuid4().hex))
     df.write.mode("overwrite").partitionBy(split_col).parquet(sub)
     sids: list[int] = []
     for v in values:
         vdir = os.path.join(sub, f"{split_col}={v}")
-        entries = []
-        if os.path.isdir(vdir):
-            for name in sorted(os.listdir(vdir)):
-                if name.endswith(".parquet"):
-                    fpath = os.path.join(vdir, name)
-                    entries.append(
-                        {
-                            "path": os.path.relpath(fpath, path),
-                            **_file_stats(fpath, stat_cols),
-                        }
-                    )
-        for attempt in range(commit_retries + 1):
-            parent = ref_head(path, ref)
-            base: list[dict] = []
-            dels: list[dict] = []
-            evolved = False
-            if parent is not None:
-                m = read_manifest(path, parent)
-                base = m["files"]
-                dels = m.get("delete_files") or []
-                evolved = (
-                    bool(m.get("schema_evolved")) or m.get("schema") != schema
-                )
-            manifest = {
-                "operation": "append",
-                "schema": schema,
-                "stat_cols": stat_cols,
-                "schema_evolved": evolved,
-                "files": base + entries,
-                "added": [e["path"] for e in entries],
+        names = sorted(os.listdir(vdir)) if os.path.isdir(vdir) else []
+        entries = [
+            {
+                "path": os.path.relpath(os.path.join(vdir, name), path),
+                **_file_stats(os.path.join(vdir, name), stat_cols),
             }
-            if dels:
-                manifest["delete_files"] = dels
-            try:
-                sids.append(_commit(path, manifest, parent, ref=ref))
-                break
-            except CommitConflict:
-                if attempt == commit_retries:
-                    raise
+            for name in names
+            if name.endswith(".parquet")
+        ]
+        sids.append(
+            _commit_append(
+                path, entries, schema, stat_cols, ref, commit_retries
+            )
+        )
     return sids
 
 
@@ -1278,7 +1288,7 @@ def plan_files(
                         skip = True
                         break
         if not skip:
-            out.append(os.path.join(path, e["path"]))
+            out.append(_data_path(path, e["path"]))
     return out
 
 
@@ -1311,15 +1321,22 @@ def read_snapshot(
         if snapshot_id is None:
             raise FileNotFoundError(f"no branch or tag {ref!r} in {path}")
     m = read_manifest(path, snapshot_id)
-    reader = spark.read
-    if m.get("schema_evolved"):
-        reader = reader.option("mergeSchema", "true")
+    reader = _reader(spark, m)
     files = plan_files(path, snapshot_id, prune)
     if not files:
         all_files = plan_files(path, snapshot_id)
         df = reader.parquet(*all_files)
         return df.where("1 = 0")
     return _apply_delete_files(spark, reader.parquet(*files), path, m)
+
+
+def _reader(spark: SparkSession, m: dict):
+    """Parquet reader for a snapshot's files: footers are merged only
+    when the manifest records a schema change (``schema_evolved``)."""
+    reader = spark.read
+    if m.get("schema_evolved"):
+        reader = reader.option("mergeSchema", "true")
+    return reader
 
 
 def _apply_delete_files(
@@ -1372,9 +1389,7 @@ def _address_and_filter(
         )
 
     if pos:
-        ddf = spark.read.parquet(
-            *[os.path.join(path, e["path"]) for e in pos]
-        )
+        ddf = spark.read.parquet(*[_data_path(path, e["path"]) for e in pos])
         df = df.join(
             F.broadcast(ddf),
             (_norm(F.col("__fp")) == _norm(ddf["file_path"]))
@@ -1384,17 +1399,11 @@ def _address_and_filter(
     if eq:
         # per-row file sequence via a broadcast (file_path, seq) map
         # derived from the manifest (missing seq = pre-feature file =
-        # 0, conservatively shadowed by every eq delete). Both join
-        # sides are normalized to the plain ABSOLUTE PATH — the
-        # runtime renders _metadata.file_path as a URI whose exact
-        # shape (file:/x vs file:///x) is not contractual, and a
-        # silent join miss here would coalesce __fseq to 0 and
+        # 0, conservatively shadowed by every eq delete), keyed by
+        # absolute path: a join miss would coalesce __fseq to 0 and
         # wrongly shadow rows appended AFTER the delete
         seq_rows = [
-            (
-                os.path.abspath(os.path.join(path, e["path"])),
-                int(e.get("seq") or 0),
-            )
+            (_data_path(path, e["path"]), int(e.get("seq") or 0))
             for e in (m or {}).get("files") or []
         ]
         seq_df = spark.createDataFrame(seq_rows, "__sfp string, __fseq long")
@@ -1406,7 +1415,7 @@ def _address_and_filter(
             for e in eq:
                 if e["col"] != col:
                     continue
-                p = spark.read.parquet(os.path.join(path, e["path"]))
+                p = spark.read.parquet(_data_path(path, e["path"]))
                 parts.append(
                     p.select(
                         F.col(col).alias("__dkey"),
@@ -1426,6 +1435,237 @@ def _address_and_filter(
     return df
 
 
+# ------------------------------------------------------ row-level DML
+# Every row-level DML op reaches rows through ONE addressing step
+# (:func:`_address`): plan the candidate files from the manifest, scan
+# them with their row addresses and the live deletes applied, select
+# the hit rows, and stage their (file_path, pos) as one position-delete
+# file. Merge-on-read commits that file; copy-on-write applies it to
+# the touched files in the same commit (:func:`_commit_dml`) — the
+# Iceberg spec's two write modes of one row-level operation.
+
+
+class _Hits(NamedTuple):
+    candidates: int  # files planned for the scan
+    staged: list[dict]  # manifest entries of the staged delete file
+    rows: int  # rows the staged file addresses (or keys it holds)
+    touched: frozenset[str]  # table-relative data files it addresses
+
+
+_NO_HITS = _Hits(0, [], 0, frozenset())
+
+
+def _dml_head(path: str, ref: str) -> tuple[int, dict]:
+    cur = ref_head(path, ref)
+    if cur is None:
+        raise FileNotFoundError(f"no snapshot on ref {ref!r} in {path}")
+    return cur, read_manifest(path, cur)
+
+
+def _stage(df: DataFrame, path: str) -> list[dict]:
+    """Stage a small DataFrame (row addresses or delete keys) as one
+    file in a fresh staging dir of data/ → its manifest entry, or none
+    (and no staging dir) when it holds no row. Uncommitted stagings
+    are invisible orphans :func:`remove_orphan_files` reclaims."""
+    entries = _write_data_files(df.repartition(1), path, [])
+    staged = [e for e in entries if e["rows"]]
+    if entries and not staged:
+        shutil.rmtree(os.path.dirname(_data_path(path, entries[0]["path"])))
+    return staged
+
+
+def _addressed_files(path: str, rel: str) -> set[str]:
+    """Table-relative data files a position-delete file addresses.
+    Delete files are kilobyte-scale: reading the column back on the
+    driver is metadata-cheap."""
+    col = pq.read_table(_data_path(path, rel), columns=["file_path"])
+    return {
+        _rel_path(path, fp)
+        for fp in col.column("file_path").unique().to_pylist()
+    }
+
+
+def _address(
+    spark: SparkSession,
+    path: str,
+    cur: int,
+    m: dict,
+    prune: tuple[str, object, object] | None,
+    predicate: str | None = None,
+    keys: DataFrame | None = None,
+) -> _Hits:
+    """The addressing step of every row-level DML op: the rows of
+    snapshot ``cur`` (manifest ``m``) in files :func:`plan_files`
+    keeps under ``prune`` where ``(predicate) = TRUE`` — SQL DELETE
+    semantics, FALSE and NULL keep the row — or whose key is in the
+    one-column ``keys`` (a broadcast semi-join: only the keys travel,
+    never the table side), staged as one position-delete file."""
+    from pyspark.sql import functions as F
+
+    candidates = plan_files(path, cur, prune=prune)
+    if not candidates:
+        return _NO_HITS
+    rows = _address_and_filter(
+        spark, _reader(spark, m).parquet(*sorted(candidates)), path, m
+    )
+    if predicate is not None:
+        rows = rows.where(f"({predicate}) = TRUE")
+    else:
+        rows = rows.join(F.broadcast(keys), keys.columns, "left_semi")
+    staged = _stage(
+        rows.select(
+            F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
+        ),
+        path,
+    )
+    touched: set[str] = set()
+    for e in staged:
+        touched |= _addressed_files(path, e["path"])
+    return _Hits(
+        len(candidates), staged, sum(e["rows"] for e in staged),
+        frozenset(touched),
+    )
+
+
+def _commit_dml(
+    spark: SparkSession,
+    path: str,
+    ref: str,
+    cur: int,
+    m: dict,
+    operation: str,
+    hits: _Hits,
+    rewrite: bool = False,
+    updates: DataFrame | None = None,
+    new: list[dict] | None = None,
+    batch_id: int | None = None,
+) -> int:
+    """Commit a row-level DML op onto parent ``cur`` (manifest ``m``)
+    → new snapshot id. Merge-on-read (``rewrite=False``) adds the
+    staged delete file to the live ones. Copy-on-write applies it
+    instead: only the touched files are rewritten, through
+    :func:`_apply_delete_files`, the staged file is removed, and the
+    kept files plus the rewrite plus the update files ``new`` commit
+    together. The schema is the parent's, or the staged ``updates``'
+    one, which a rewrite then takes too. A streaming ``batch_id`` tags
+    the commit; otherwise the chain's last one is carried forward."""
+    schema = m.get("schema")
+    if updates is not None:
+        schema = updates.schema.simpleString()
+    evolved = bool(m.get("schema_evolved")) or schema != m.get("schema")
+    files, added, dels = m["files"], list(new or []), hits.staged
+    if rewrite:
+        dels = []
+        if hits.touched:
+            applied = (m.get("delete_files") or []) + hits.staged
+            kept_rows = _apply_delete_files(
+                spark,
+                _reader(spark, m).parquet(
+                    *[_data_path(path, p) for p in sorted(hits.touched)]
+                ),
+                path,
+                {**m, "delete_files": applied},
+            )
+            if updates is not None:
+                kept_rows = updates.where("1 = 0").unionByName(
+                    kept_rows, allowMissingColumns=True
+                )
+            files = [e for e in files if e["path"] not in hits.touched]
+            added = (
+                _write_data_files(kept_rows, path, m.get("stat_cols") or [])
+                + added
+            )
+        for e in hits.staged:
+            shutil.rmtree(os.path.dirname(_data_path(path, e["path"])))
+    manifest = {
+        "operation": operation,
+        "schema": schema,
+        "stat_cols": m.get("stat_cols") or [],
+        "schema_evolved": evolved,
+        "files": files + added,
+        "added": [e["path"] for e in added],
+    }
+    # CoW keeps the live deletes: entries addressing rewritten (now
+    # dead) files are inert, entries addressing kept files still apply
+    dels = (m.get("delete_files") or []) + dels
+    if dels:
+        manifest["delete_files"] = dels
+    batch = (
+        _last_batch_in_chain(path, cur) if batch_id is None else int(batch_id)
+    )
+    if batch is not None:
+        manifest["batch_id"] = batch
+    return _commit(path, _carry_spec(manifest, m), cur, ref=ref)
+
+
+def _merge(
+    spark: SparkSession,
+    path: str,
+    updates: DataFrame,
+    key_col: str,
+    ref: str,
+    rewrite: bool,
+    batch_id: int | None = None,
+) -> tuple[int, dict, _Hits]:
+    """MERGE INTO by ``key_col`` in either write mode → (snapshot id,
+    parent manifest, hits). The update rows are staged FIRST, with the
+    key min/max riding the write as observed metrics — one Spark job,
+    no separate agg pass — and the match keys are read back from the
+    staged files, so the updates' lineage runs once."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    cur, m = _dml_head(path, ref)
+    if rewrite:
+        # a copy-on-write merge writes one schema: the union of the
+        # table's and the updates' (types widened, missing columns
+        # NULL), as one write of rewrite and updates together would
+        updates = (
+            read_snapshot(spark, path, cur)
+            .where("1 = 0")
+            .unionByName(updates, allowMissingColumns=True)
+        )
+    obs = Observation(f"merge_{uuid.uuid4().hex}")
+    new = _write_data_files(
+        updates.observe(
+            obs, F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
+        ),
+        path,
+        m.get("stat_cols") or [],
+    )
+    lo, hi = obs.get["lo"], obs.get["hi"]
+    hits = _NO_HITS
+    if lo is not None:
+        keys = spark.read.parquet(
+            *[_data_path(path, e["path"]) for e in new]
+        ).select(key_col)
+        hits = _address(spark, path, cur, m, (key_col, lo, hi), keys=keys)
+    sid = _commit_dml(
+        spark, path, ref, cur, m, "merge" if rewrite else "merge-mor", hits,
+        rewrite=rewrite, updates=updates, new=new, batch_id=batch_id,
+    )
+    return sid, m, hits
+
+
+def _delete(
+    spark: SparkSession,
+    path: str,
+    predicate: str,
+    prune: tuple[str, object, object] | None,
+    ref: str,
+    rewrite: bool,
+) -> tuple[int, dict, _Hits]:
+    """DELETE WHERE ``predicate`` in either write mode → (snapshot id,
+    parent manifest, hits)."""
+    cur, m = _dml_head(path, ref)
+    hits = _address(spark, path, cur, m, prune, predicate=predicate)
+    sid = _commit_dml(
+        spark, path, ref, cur, m, "delete" if rewrite else "delete-mor",
+        hits, rewrite=rewrite,
+    )
+    return sid, m, hits
+
+
 def delete_keys_mor(
     spark: SparkSession,
     path: str,
@@ -1443,40 +1683,16 @@ def delete_keys_mor(
     by addressing files; equality deletes need the seq comparison).
     ``ref`` commits against a branch head instead of main (the
     write-audit-publish flow). Returns ``{"snapshot_id", "keys"}``."""
-    cur = ref_head(path, ref)
-    if cur is None:
-        raise FileNotFoundError(f"no snapshot on ref {ref!r} in {path}")
-    m = read_manifest(path, cur)
-    sub = os.path.join(path, "data", uuid.uuid4().hex)
-    keys.select(key_col).distinct().repartition(1).write.mode(
-        "overwrite"
-    ).parquet(sub)
-    new_dels = []
-    n_keys = 0
-    for name in sorted(os.listdir(sub)):
-        if not name.endswith(".parquet"):
-            continue
-        fpath = os.path.join(sub, name)
-        md = pq.ParquetFile(fpath).metadata
-        n_keys += md.num_rows
-        if md.num_rows:
-            new_dels.append(
-                {"path": os.path.relpath(fpath, path), "rows": md.num_rows,
-                 "kind": "eq", "col": key_col}
-            )
-    batch = _last_batch_in_chain(path, cur)
-    manifest = {
-        "operation": "delete-mor",
-        "schema": m.get("schema"),
-        "stat_cols": m.get("stat_cols") or [],
-        "schema_evolved": bool(m.get("schema_evolved")),
-        "files": m["files"],
-        "added": [],
-        "delete_files": (m.get("delete_files") or []) + new_dels,
-    }
-    if batch is not None:
-        manifest["batch_id"] = batch
-    sid = _commit(path, _carry_spec(manifest, m), cur, ref=ref)
+    cur, m = _dml_head(path, ref)
+    staged = [
+        {**e, "kind": "eq", "col": key_col}
+        for e in _stage(keys.select(key_col).distinct(), path)
+    ]
+    n_keys = sum(e["rows"] for e in staged)
+    sid = _commit_dml(
+        spark, path, ref, cur, m, "delete-mor",
+        _Hits(0, staged, n_keys, frozenset()),
+    )
     return {"snapshot_id": sid, "keys": n_keys}
 
 
@@ -1489,10 +1705,10 @@ def delete_where_mor(
 ) -> dict:
     """Row-level DELETE as a MERGE-ON-READ commit (Iceberg v2
     position deletes): instead of rewriting every file containing a
-    matching row (:func:`delete_where`'s copy-on-write), write ONE
-    small delete file recording the (file_path, row position) of each
-    deleted row and commit it metadata-only. Scans apply the delete
-    file via a broadcast anti-join (:func:`_apply_delete_files`);
+    matching row (:func:`delete_where`'s copy-on-write), commit the
+    addressing step's ONE small delete file recording the (file_path,
+    row position) of each deleted row, metadata-only. Scans apply the
+    delete file via a broadcast anti-join (:func:`_apply_delete_files`);
     :func:`compact_data_files` / :func:`zorder_data_files` materialize
     the deletes and clear them (Iceberg's rewrite maintenance).
 
@@ -1502,61 +1718,15 @@ def delete_where_mor(
     kilobyte-scale delete file instead of rewriting gigabytes.
 
     NULL semantics match SQL DELETE (rows where the predicate is TRUE
-    are deleted; FALSE or NULL are kept). ``ref`` commits against a
-    branch head instead of main. Returns ``{"snapshot_id",
-    "rows_deleted", "delete_files"}``."""
-    from pyspark.sql import functions as F
-
-    cur = ref_head(path, ref)
-    if cur is None:
-        raise FileNotFoundError(f"no snapshot on ref {ref!r} in {path}")
-    m = read_manifest(path, cur)
-    candidates = plan_files(path, cur, prune=prune)
-    hits = None
-    if candidates:
-        reader = spark.read
-        if m.get("schema_evolved"):
-            reader = reader.option("mergeSchema", "true")
-        rows = _address_and_filter(
-            spark, reader.parquet(*sorted(candidates)), path, m
-        )
-        hits = rows.where(f"({predicate}) = TRUE").select(
-            F.col("__fp").alias("file_path"),
-            F.col("__pos").alias("pos"),
-        )
-    new_dels: list[dict] = []
-    rows_deleted = 0
-    if hits is not None:
-        sub = os.path.join(path, "data", uuid.uuid4().hex)
-        hits.repartition(1).write.mode("overwrite").parquet(sub)
-        for name in sorted(os.listdir(sub)):
-            if not name.endswith(".parquet"):
-                continue
-            fpath = os.path.join(sub, name)
-            md = pq.ParquetFile(fpath).metadata
-            rows_deleted += md.num_rows
-            if md.num_rows:
-                new_dels.append(
-                    {"path": os.path.relpath(fpath, path),
-                     "rows": md.num_rows}
-                )
-    batch = _last_batch_in_chain(path, cur)
-    manifest = {
-        "operation": "delete-mor",
-        "schema": m.get("schema"),
-        "stat_cols": m.get("stat_cols") or [],
-        "schema_evolved": bool(m.get("schema_evolved")),
-        "files": m["files"],
-        "added": [],
-        "delete_files": (m.get("delete_files") or []) + new_dels,
-    }
-    if batch is not None:
-        manifest["batch_id"] = batch
-    sid = _commit(path, _carry_spec(manifest, m), cur, ref=ref)
+    are deleted; FALSE or NULL are kept). ``prune=(col, lo, hi)``
+    limits the scan to files whose stats can hold a match. ``ref``
+    commits against a branch head instead of main. Returns
+    ``{"snapshot_id", "rows_deleted", "delete_files"}``."""
+    sid, m, hits = _delete(spark, path, predicate, prune, ref, rewrite=False)
     return {
         "snapshot_id": sid,
-        "rows_deleted": rows_deleted,
-        "delete_files": len(manifest["delete_files"]),
+        "rows_deleted": hits.rows,
+        "delete_files": len(m.get("delete_files") or []) + len(hits.staged),
     }
 
 
@@ -1573,102 +1743,105 @@ def merge_into_mor(
     file rewritten (Iceberg v2's cheap-upsert path, vs
     :func:`merge_into`'s copy-on-write). Write amplification is
     O(size of updates), independent of how many table files hold a
-    matched key. File selection reuses the manifest min/max pruning +
-    exact broadcast match of the CoW path, but the matched files only
-    contribute ROW ADDRESSES, never bytes.
+    matched key. The addressing step prunes candidates by the update
+    keys' min/max and matches keys by a broadcast semi-join; the
+    matched files only contribute ROW ADDRESSES, never bytes.
 
     ``ref`` commits against a branch head instead of main — the
     write-audit-publish upsert: stage a MERGE on an audit branch,
     validate it there, then :func:`publish_branch`; main's readers
     never see the unaudited upsert (Iceberg's branch-scoped MERGE).
+    An explicit ``batch_id`` tags the commit (the streaming upsert
+    sink's exactly-once marker).
 
     Returns ``{"snapshot_id", "rows_shadowed", "files_touched"}``."""
-    from pyspark.sql import functions as F
-
-    cur = ref_head(path, ref)
-    if cur is None:
-        raise FileNotFoundError(f"no snapshot on ref {ref!r} in {path}")
-    m = read_manifest(path, cur)
-    stat_cols = m.get("stat_cols") or []
-    keys = updates.select(key_col).distinct()
-    # the update rows are staged FIRST, with the key min/max riding
-    # the write as observed metrics — one Spark job instead of a
-    # separate agg pass over the batch (staged-but-uncommitted files
-    # are invisible orphans either way, so the reorder is free)
-    from pyspark.sql import Observation
-
-    obs = Observation(f"mor_{uuid.uuid4().hex}")
-    new = _write_data_files(
-        updates.observe(
-            obs, F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
-        ),
-        path,
-        stat_cols,
+    sid, _m, hits = _merge(
+        spark, path, updates, key_col, ref, rewrite=False, batch_id=batch_id
     )
-    lo, hi = obs.get["lo"], obs.get["hi"]
-    candidates = (
-        plan_files(path, cur, prune=(key_col, lo, hi))
-        if lo is not None
-        else []
-    )
-    new_dels: list[dict] = []
-    rows_shadowed = 0
-    files_touched = 0
-    if candidates:
-        reader = spark.read
-        if m.get("schema_evolved"):
-            reader = reader.option("mergeSchema", "true")
-        rows = _address_and_filter(
-            spark, reader.parquet(*sorted(candidates)), path, m
-        )
-        hits = rows.join(F.broadcast(keys), key_col, "inner").select(
-            F.col("__fp").alias("file_path"),
-            F.col("__pos").alias("pos"),
-        )
-        sub = os.path.join(path, "data", uuid.uuid4().hex)
-        hits.repartition(1).write.mode("overwrite").parquet(sub)
-        touched = set()
-        for name in sorted(os.listdir(sub)):
-            if not name.endswith(".parquet"):
-                continue
-            fpath = os.path.join(sub, name)
-            md = pq.ParquetFile(fpath).metadata
-            rows_shadowed += md.num_rows
-            if md.num_rows:
-                new_dels.append(
-                    {"path": os.path.relpath(fpath, path),
-                     "rows": md.num_rows}
-                )
-                # delete files are kilobyte-scale: reading the column
-                # back for the touched-file metric is metadata-cheap
-                touched.update(
-                    pq.read_table(fpath, columns=["file_path"])
-                    .column("file_path").to_pylist()
-                )
-        files_touched = len(touched)
-    schema = updates.schema.simpleString()
-    evolved = bool(m.get("schema_evolved")) or m.get("schema") != schema
-    # an explicit batch_id tags THIS commit (the streaming upsert
-    # sink's exactly-once marker); otherwise carry the last one
-    batch = (
-        _last_batch_in_chain(path, cur) if batch_id is None else int(batch_id)
-    )
-    manifest = {
-        "operation": "merge-mor",
-        "schema": m.get("schema") if not evolved else schema,
-        "stat_cols": stat_cols,
-        "schema_evolved": evolved,
-        "files": m["files"] + new,
-        "added": [e["path"] for e in new],
-        "delete_files": (m.get("delete_files") or []) + new_dels,
-    }
-    if batch is not None:
-        manifest["batch_id"] = batch
-    sid = _commit(path, _carry_spec(manifest, m), cur, ref=ref)
     return {
         "snapshot_id": sid,
-        "rows_shadowed": rows_shadowed,
-        "files_touched": files_touched,
+        "rows_shadowed": hits.rows,
+        "files_touched": len(hits.touched),
+    }
+
+
+def merge_into(
+    spark: SparkSession,
+    path: str,
+    updates: DataFrame,
+    key_col: str,
+) -> dict:
+    """MERGE INTO (upsert by key) as a copy-on-write commit on main:
+    rows of ``updates`` replace same-key rows of the table, new keys
+    are inserted, and only the data files that actually CONTAIN a
+    matched key are rewritten.
+
+    Copy-on-write is :func:`merge_into_mor`'s addressing step with the
+    deletes applied in the same commit:
+
+    1. the updates are staged once; manifest min/max pruning on their
+       key range picks the candidate files — the rest keep their
+       manifest entries and their bytes are never read;
+    2. a broadcast semi-join of the candidates against the update keys
+       stages the matched rows' addresses as a position-delete file.
+       Candidates with overlapping stats but no matched key are kept
+       verbatim (this bounds write amplification when key ranges
+       overlap loosely);
+    3. the files that delete file addresses are rewritten without
+       those rows, the delete file is dropped, and the kept files +
+       rewritten files + update files commit as one ``merge``
+       snapshot.
+
+    Like compaction, a merge is not an append: :func:`incremental_read`
+    refuses to traverse it. Streaming batch ids are carried forward so
+    a replayed micro-batch after a merge still commits exactly once.
+    Old files stay readable for time travel until
+    :func:`expire_snapshots`.
+
+    Returns ``{"snapshot_id", "files_total", "files_candidates",
+    "files_rewritten"}``.
+    """
+    sid, m, hits = _merge(spark, path, updates, key_col, "main", rewrite=True)
+    return {
+        "snapshot_id": sid,
+        "files_total": len(m["files"]),
+        "files_candidates": hits.candidates,
+        "files_rewritten": len(hits.touched),
+    }
+
+
+def delete_where(
+    spark: SparkSession,
+    path: str,
+    predicate: str,
+    prune: tuple[str, object, object] | None = None,
+) -> dict:
+    """Row-level ``DELETE FROM t WHERE predicate`` as a copy-on-write
+    commit on main: :func:`delete_where_mor`'s addressing step with the
+    deletes applied in the same commit. Optional manifest min/max
+    pruning (``prune=(col, lo, hi)``) keeps files whose stats can't
+    hold a matching row verbatim, unread; the scan of the rest stages
+    the addresses of rows where the predicate is TRUE, and only the
+    files holding one are rewritten, without those rows. Candidates
+    whose stats overlap but hold no matching row keep their manifest
+    entries untouched.
+
+    SQL DELETE semantics on NULLs: a row is deleted iff the predicate
+    is TRUE — rows where it evaluates FALSE **or NULL** are kept.
+
+    Commits a ``delete`` snapshot; like merge/replace it breaks the
+    append-only change feed, carries the streaming batch id forward,
+    and leaves old files readable for time travel. Returns
+    ``{"snapshot_id", "files_total", "files_candidates",
+    "files_rewritten", "rows_deleted"}``.
+    """
+    sid, m, hits = _delete(spark, path, predicate, prune, "main", rewrite=True)
+    return {
+        "snapshot_id": sid,
+        "files_total": len(m["files"]),
+        "files_candidates": hits.candidates,
+        "files_rewritten": len(hits.touched),
+        "rows_deleted": hits.rows,
     }
 
 
@@ -1700,7 +1873,7 @@ def incremental_read(
                 f"snapshot {sid} is {m.get('operation')!r}; incremental "
                 "reads only traverse append snapshots"
             )
-        added.extend(os.path.join(path, p) for p in m.get("added", []))
+        added.extend(_data_path(path, p) for p in m.get("added", []))
         sid = m.get("parent_id")
     if not added:
         return read_snapshot(spark, path, to_sid).where("1 = 0")
@@ -1878,8 +2051,6 @@ def remove_orphan_files(path: str, older_than_s: float = 0.0) -> list[str]:
             deleted.append(rel)
         left = os.listdir(subdir)
         if left and not any(n.endswith(".parquet") for n in left):
-            import shutil
-
             shutil.rmtree(subdir, ignore_errors=True)
         elif not left:
             os.rmdir(subdir)
@@ -1948,13 +2119,7 @@ def snapshot_diff(
             s = int(d_by[dp].get("seq") or 0)
             eq_min_seq = s if eq_min_seq is None else min(eq_min_seq, s)
             continue
-        col = pq.read_table(
-            os.path.join(path, dp), columns=["file_path"]
-        ).column("file_path")
-        touched.update(
-            os.path.relpath(_strip_file_uri(fp), path)
-            for fp in set(col.to_pylist())
-        )
+        touched |= _addressed_files(path, dp)
     re_scan = touched & pa & pb
     if eq_min_seq is not None:
         # missing seq = pre-feature file = 0, shadowed by every eq
@@ -1968,14 +2133,12 @@ def snapshot_diff(
         }
     only_a = sorted((pa - pb) | re_scan)
     only_b = sorted((pb - pa) | re_scan)
-    schema_src = spark.read.parquet(
-        os.path.join(path, (sorted(pa | pb))[0])
-    ).schema
+    schema_src = spark.read.parquet(_data_path(path, min(pa | pb))).schema
 
     def _side(paths, side_m):
         if not paths:
             return spark.createDataFrame([], schema_src)
-        df = spark.read.parquet(*[os.path.join(path, p) for p in paths])
+        df = spark.read.parquet(*[_data_path(path, p) for p in paths])
         return _apply_delete_files(spark, df, path, side_m)
 
     A, B = _side(only_a, ma), _side(only_b, mb)
@@ -2007,229 +2170,6 @@ def snapshot_diff(
             *[picked[c].alias(c) for c in val_cols],
         )
     )
-
-
-def _strip_file_uri(u: str) -> str:
-    """``input_file_name()`` yields a ``file:///...`` URI; reduce it
-    to the plain absolute path the manifest uses."""
-    if u.startswith("file:"):
-        u = u[5:]
-    while u.startswith("//"):
-        u = u[1:]
-    return u
-
-
-def merge_into(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_col: str,
-) -> dict:
-    """MERGE INTO (upsert by key) as a copy-on-write commit — the
-    Iceberg ``MERGE`` the reference's full-table rewrites lack: rows
-    of ``updates`` replace same-key rows of the table, new keys are
-    inserted, and only the data files that actually CONTAIN a matched
-    key are rewritten.
-
-    File selection is two-stage, both metadata-cheap:
-
-    1. manifest min/max pruning on ``key_col`` — files whose
-       [min, max] range can't intersect the updates' key range are
-       kept verbatim (their manifest entries are copied, their bytes
-       never read);
-    2. an exact match scan over the surviving candidates — a
-       broadcast semi-join of the candidate files against the update
-       keys, grouped by ``input_file_name()``; only file PATHS reach
-       the driver. Candidates with overlapping stats but no actual
-       matched key are also kept verbatim (this is what bounds write
-       amplification when key ranges overlap loosely).
-
-    The rewritten set = (candidate rows minus matched keys) ∪ updates,
-    committed together with the kept entries as a ``merge`` snapshot.
-    Like compaction, a merge is not an append: :func:`incremental_read`
-    refuses to traverse it. Streaming batch ids are carried forward so
-    a replayed micro-batch after a merge still commits exactly once.
-    Old files stay readable for time travel until
-    :func:`expire_snapshots`.
-
-    At 10^12 rows the driver-side state is one (lo, hi) pair plus the
-    rewritten file-path list; the anti-join broadcasts only the update
-    KEYS, never the table side.
-
-    Returns ``{"snapshot_id", "files_total", "files_candidates",
-    "files_rewritten"}``.
-    """
-    from pyspark.sql import functions as F
-
-    cur = current_snapshot_id(path)
-    if cur is None:
-        raise FileNotFoundError(f"no current snapshot in {path}")
-    m = read_manifest(path, cur)
-    stat_cols = m.get("stat_cols") or []
-    keys = updates.select(key_col).distinct()
-    lo, hi = updates.agg(F.min(key_col), F.max(key_col)).first()
-    all_entries = m["files"]
-    candidates = (
-        set(plan_files(path, cur, prune=(key_col, lo, hi)))
-        if lo is not None
-        else set()
-    )
-    reader = spark.read
-    if m.get("schema_evolved"):
-        reader = reader.option("mergeSchema", "true")
-    live_dels = m.get("delete_files")
-    matched: set = set()
-    if candidates:
-        # the captured __fp address replaces input_file_name(): the
-        # latter cannot resolve once the MOR anti-join puts a second
-        # source in the plan
-        cand_rows = _address_and_filter(
-            spark, reader.parquet(*sorted(candidates)), path, m
-        )
-        hit = (
-            cand_rows.select(key_col, "__fp")
-            .join(F.broadcast(keys), key_col, "inner")
-            .select("__fp")
-            .distinct()
-        )
-        # file paths only — bounded by the candidate file count
-        matched = {_strip_file_uri(r["__fp"]) for r in hit.collect()}
-    kept = [
-        e
-        for e in all_entries
-        if os.path.join(path, e["path"]) not in matched
-    ]
-    if matched:
-        # position-delete-shadowed rows must not resurrect through
-        # the rewrite: filter them before the anti-join
-        base_rows = _apply_delete_files(
-            spark, reader.parquet(*sorted(matched)), path, m
-        )
-        keep_rows = base_rows.join(F.broadcast(keys), key_col, "left_anti")
-        new_rows = keep_rows.unionByName(updates, allowMissingColumns=True)
-    else:
-        new_rows = updates
-    schema = new_rows.schema.simpleString()
-    evolved = bool(m.get("schema_evolved")) or m.get("schema") != schema
-    new = _write_data_files(new_rows, path, stat_cols)
-    batch = last_committed_batch(path)
-    manifest = {
-        "operation": "merge",
-        # the schema `evolved` was computed against — recording the
-        # stale parent schema here made every later append re-diff
-        # against a schema the table no longer has
-        "schema": schema,
-        "stat_cols": stat_cols,
-        "schema_evolved": evolved,
-        "files": kept + new,
-        "added": [e["path"] for e in new],
-    }
-    if live_dels:
-        # entries referencing rewritten (now dead) files are inert;
-        # entries referencing kept files must keep applying
-        manifest["delete_files"] = live_dels
-    if batch is not None:
-        manifest["batch_id"] = batch
-    sid = _commit(path, _carry_spec(manifest, m), cur)
-    return {
-        "snapshot_id": sid,
-        "files_total": len(all_entries),
-        "files_candidates": len(candidates),
-        "files_rewritten": len(matched),
-    }
-
-
-def delete_where(
-    spark: SparkSession,
-    path: str,
-    predicate: str,
-    prune: tuple[str, object, object] | None = None,
-) -> dict:
-    """Row-level ``DELETE FROM t WHERE predicate`` as a copy-on-write
-    commit, the same two-stage file selection as :func:`merge_into`:
-
-    1. optional manifest min/max pruning (``prune=(col, lo, hi)``) —
-       files whose stats can't hold a matching row are kept verbatim
-       without reading a byte;
-    2. an exact scan of the survivors grouped by
-       ``input_file_name()`` — only files that actually CONTAIN a row
-       where the predicate is TRUE are rewritten (with those rows
-       removed); candidates whose stats overlap but hold no matching
-       row keep their manifest entries untouched.
-
-    SQL DELETE semantics on NULLs: a row is deleted iff the predicate
-    is TRUE — rows where it evaluates FALSE **or NULL** are kept
-    (the rewrite filters on ``(predicate) IS NOT TRUE``).
-
-    Commits a ``delete`` snapshot; like merge/replace it breaks the
-    append-only change feed, carries the streaming batch id forward,
-    and leaves old files readable for time travel. Returns
-    ``{"snapshot_id", "files_total", "files_candidates",
-    "files_rewritten", "rows_deleted"}``.
-    """
-    from pyspark.sql import functions as F
-
-    cur = current_snapshot_id(path)
-    if cur is None:
-        raise FileNotFoundError(f"no current snapshot in {path}")
-    m = read_manifest(path, cur)
-    stat_cols = m.get("stat_cols") or []
-    all_entries = m["files"]
-    candidates = set(plan_files(path, cur, prune=prune))
-    live_dels = m.get("delete_files")
-    matched: set = set()
-    rows_deleted = 0
-    if candidates:
-        reader = spark.read
-        if m.get("schema_evolved"):
-            reader = reader.option("mergeSchema", "true")
-        cand_rows = _address_and_filter(
-            spark, reader.parquet(*sorted(candidates)), path, m
-        )
-        per_file = (
-            cand_rows.where(f"({predicate}) = TRUE")
-            .groupBy(F.col("__fp").alias("__f"))
-            .count()
-            .collect()
-        )
-        matched = {_strip_file_uri(r["__f"]) for r in per_file}
-        rows_deleted = sum(r["count"] for r in per_file)
-    kept = [
-        e
-        for e in all_entries
-        if os.path.join(path, e["path"]) not in matched
-    ]
-    new: list[dict] = []
-    if matched:
-        reader = spark.read
-        if m.get("schema_evolved"):
-            reader = reader.option("mergeSchema", "true")
-        base_rows = _apply_delete_files(
-            spark, reader.parquet(*sorted(matched)), path, m
-        )
-        keep_rows = base_rows.where(f"({predicate}) IS NOT TRUE")
-        new = _write_data_files(keep_rows, path, stat_cols)
-    batch = last_committed_batch(path)
-    manifest = {
-        "operation": "delete",
-        "schema": m.get("schema"),
-        "stat_cols": stat_cols,
-        "schema_evolved": bool(m.get("schema_evolved")),
-        "files": kept + new,
-        "added": [e["path"] for e in new],
-    }
-    if live_dels:
-        manifest["delete_files"] = live_dels
-    if batch is not None:
-        manifest["batch_id"] = batch
-    sid = _commit(path, _carry_spec(manifest, m), cur)
-    return {
-        "snapshot_id": sid,
-        "files_total": len(all_entries),
-        "files_candidates": len(candidates),
-        "files_rewritten": len(matched),
-        "rows_deleted": rows_deleted,
-    }
 
 
 def expire_snapshots(path: str, keep_last: int = 1) -> list[str]:

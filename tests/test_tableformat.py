@@ -293,10 +293,22 @@ def _range_table(spark, t, n=200, files=4):
     overwrite_snapshot(df, t, stat_cols=["doc_id"])
 
 
-def test_merge_upserts_and_rewrites_only_matched_files(spark, tmp_path):
+def _table_path(tmp_path, monkeypatch, where):
+    """``tbl`` under tmp_path, named absolutely or relative to a
+    working directory of tmp_path (the JVM keeps its own)."""
+    if where == "absolute":
+        return str(tmp_path / "tbl")
+    monkeypatch.chdir(tmp_path)
+    return "tbl"
+
+
+@pytest.mark.parametrize("where", ["absolute", "relative"])
+def test_merge_upserts_and_rewrites_only_matched_files(
+    spark, tmp_path, monkeypatch, where
+):
     from kblock_spark.io.tableformat import merge_into
 
-    t = str(tmp_path / "tbl")
+    t = _table_path(tmp_path, monkeypatch, where)
     _range_table(spark, t)
     pre = current_snapshot_id(t)
     n_files = len(plan_files(t))
@@ -387,10 +399,13 @@ def test_merge_preserves_streaming_batch_id(spark, tmp_path):
     assert current_snapshot_id(t) == sid
 
 
-def test_delete_where_rewrites_only_matching_files(spark, tmp_path):
+@pytest.mark.parametrize("where", ["absolute", "relative"])
+def test_delete_where_rewrites_only_matching_files(
+    spark, tmp_path, monkeypatch, where
+):
     from kblock_spark.io.tableformat import delete_where
 
-    t = str(tmp_path / "tbl")
+    t = _table_path(tmp_path, monkeypatch, where)
     _range_table(spark, t)          # 200 rows, 4 range-disjoint files
     pre = current_snapshot_id(t)
     n_files = len(plan_files(t))
@@ -458,6 +473,52 @@ def test_delete_where_preserves_streaming_batch_id(spark, tmp_path):
     sink(_df(spark, 50, 80), 1)     # replay after delete: still no-op
     assert current_snapshot_id(t) == sid
     assert read_snapshot(spark, t).count() == 70
+
+
+@pytest.mark.parametrize("op", ["merge_into", "delete_where"])
+def test_cow_dml_lost_commit_changes_nothing(spark, tmp_path, monkeypatch, op):
+    """A copy-on-write MERGE or DELETE whose commit is lost re-raises
+    and leaves the table as it was: same head, manifest and rows, and
+    everything it staged is an orphan remove_orphan_files reclaims."""
+    from kblock_spark.io import tableformat as tf
+
+    t = str(tmp_path / "tbl")
+    _range_table(spark, t)
+    # a live position delete: the rewrite applies it with the staged one
+    tf.delete_where_mor(spark, t, "doc_id = 1")
+    head = current_snapshot_id(t)
+    manifest = read_manifest(t)
+    rows = sorted(map(tuple, read_snapshot(spark, t).collect()))
+
+    def lost_commit(path, manifest, expected_parent, ref="main"):
+        raise CommitConflict("simulated lost race")
+
+    monkeypatch.setattr(tf, "_commit", lost_commit)
+    with pytest.raises(CommitConflict):
+        if op == "merge_into":
+            upd = spark.range(0, 30, 3).select(
+                F.col("id").alias("doc_id"), F.lit(-1).alias("v")
+            )
+            tf.merge_into(spark, t, upd, "doc_id")
+        else:
+            tf.delete_where(spark, t, "doc_id < 40")
+    assert current_snapshot_id(t) == head
+    assert read_manifest(t) == manifest
+    assert sorted(map(tuple, read_snapshot(spark, t).collect())) == rows
+    tf.remove_orphan_files(t)
+    referenced = {
+        e["path"] for e in manifest["files"] + manifest["delete_files"]
+    }
+    data = os.path.join(t, "data")
+    on_disk = {
+        os.path.relpath(os.path.join(root, n), t)
+        for root, _, names in os.walk(data)
+        for n in names
+        if n.endswith(".parquet")
+    }
+    assert on_disk == referenced
+    # no staging dir outlives the reclaim either
+    assert set(os.listdir(data)) == {p.split(os.sep)[1] for p in referenced}
 
 
 def test_zorder_clustering_enables_multi_dim_pruning(spark, tmp_path):

@@ -1,7 +1,8 @@
 """Model-based fuzz of the table-format DML surface: a random
-sequence of append / MOR-upsert / equality-delete / predicate-delete
-/ rollback / compaction ops is applied to a real snapshot table AND
-to a plain in-memory dict model; after every committing op the
+sequence of append / upsert / equality-delete / predicate-delete /
+rollback / compaction ops — upserts and predicate deletes both
+merge-on-read and copy-on-write — is applied to a real snapshot
+table AND to a plain in-memory dict model; after every committing op the
 merge-on-read scan must equal the model exactly. This is the test
 shape that catches cross-op interaction bugs no single-op test can
 (e.g. an eq delete's sequence scoping vs a later rollback, or a
@@ -20,13 +21,18 @@ from kblock_spark.io.tableformat import (
     compact_data_files,
     current_snapshot_id,
     delete_keys_mor,
+    delete_where,
     delete_where_mor,
+    merge_into,
     merge_into_mor,
     read_snapshot,
     rollback_to,
 )
 
-_OPS = ["append", "upsert", "del_keys", "del_where", "rollback", "compact"]
+_OPS = [
+    "append", "upsert", "cow_upsert", "del_keys", "del_where",
+    "cow_del_where", "rollback", "compact",
+]
 _UNIQ = [0]  # distinct table dir per hypothesis example (tmp_path is
 # function-scoped, shared across examples of one test call)
 
@@ -73,14 +79,15 @@ def test_dml_sequences_match_model(spark, tmp_path, ops):
             next_key += n
             append_snapshot(_rows_df(spark, batch), t, stat_cols=["doc_id"])
             model.update(batch)
-        elif op == "upsert":
+        elif op in ("upsert", "cow_upsert"):
             existing = sorted(model)[:: max(1, r % 5 + 1)][:5]
             fresh = [next_key + i for i in range(r % 3)]
             next_key += r % 3
             batch = {k: 10_000 + k + r % 100 for k in [*existing, *fresh]}
             if not batch:
                 continue
-            merge_into_mor(spark, t, _rows_df(spark, batch), "doc_id")
+            merge = merge_into_mor if op == "upsert" else merge_into
+            merge(spark, t, _rows_df(spark, batch), "doc_id")
             model.update(batch)
         elif op == "del_keys":
             victims = sorted(model)[r % 3 :: max(1, r % 7 + 2)][:4]
@@ -93,9 +100,10 @@ def test_dml_sequences_match_model(spark, tmp_path, ops):
             )
             for k in victims:
                 model.pop(k, None)
-        elif op == "del_where":
+        elif op in ("del_where", "cow_del_where"):
             m = r % 5 + 2
-            delete_where_mor(spark, t, f"v % {m} = {r % m}")
+            delete = delete_where_mor if op == "del_where" else delete_where
+            delete(spark, t, f"v % {m} = {r % m}")
             model = {k: v for k, v in model.items() if v % m != r % m}
         elif op == "rollback":
             sid = sorted(states)[r % len(states)]

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from kblock_spark.io.tableformat import (
     append_snapshot,
+    append_snapshots_split,
     compact_data_files,
     delete_where_mor,
     plan_files,
@@ -202,3 +203,30 @@ def test_truncate_range_pruning(spark, tmp_path):
     keep2 = [e for e in trunc
              if e["partition"]["truncate_doc_id"] in ("100", "200")]
     assert len(planned2) == plain + len(keep2)
+
+
+def test_split_append_keeps_spec_id_after_revert(spark, tmp_path):
+    """append_snapshots_split commits like append_snapshot: after a
+    spec revert it keeps the spec id counter, so the next spec gets a
+    fresh id and files of the old bucket(n=4) spec are planned
+    conservatively instead of bucket-pruned with the new n=8."""
+    t = str(tmp_path / "tbl")
+    append_snapshot(_df(spark, 0, 10), t)
+    set_partition_spec(t, [{"col": "doc_id", "transform": "bucket", "n": 4}])
+    append_snapshot(_df(spark, 10, 50), t)
+    set_partition_spec(t, [])
+    append_snapshots_split(
+        _df(spark, 50, 60).withColumn("part", F.col("doc_id") % 2),
+        t, "part", [0, 1],
+    )
+    set_partition_spec(t, [{"col": "doc_id", "transform": "bucket", "n": 8}])
+    missed = [
+        k
+        for k in range(10, 50)
+        if read_snapshot(spark, t, prune=("doc_id", k, k))
+        .where(F.col("doc_id") == k)
+        .count()
+        != 1
+    ]
+    assert missed == []
+    assert read_manifest(t)["spec_id"] == 3
