@@ -1439,16 +1439,17 @@ def _address_and_filter(
 # Every row-level DML op reaches rows through ONE addressing step
 # (:func:`_address`): plan the candidate files from the manifest, scan
 # them with their row addresses and the live deletes applied, select
-# the hit rows, and stage their (file_path, pos) as one position-delete
-# file. Merge-on-read commits that file; copy-on-write applies it to
-# the touched files in the same commit (:func:`_commit_dml`) — the
-# Iceberg spec's two write modes of one row-level operation.
+# the hit rows. Merge-on-read stages their (file_path, pos) as one
+# position-delete file and commits it; copy-on-write rewrites the
+# files holding a hit row without those rows, in the same commit
+# (:func:`_rewrite`) — the Iceberg spec's two write modes of one
+# row-level operation.
 
 
 class _Hits(NamedTuple):
     candidates: int  # files planned for the scan
     staged: list[dict]  # manifest entries of the staged delete file
-    rows: int  # rows the staged file addresses (or keys it holds)
+    rows: int  # rows hit
     touched: frozenset[str]  # table-relative data files it addresses
 
 
@@ -1463,10 +1464,10 @@ def _dml_head(path: str, ref: str) -> tuple[int, dict]:
 
 
 def _stage(df: DataFrame, path: str) -> list[dict]:
-    """Stage a small DataFrame (row addresses or delete keys) as one
-    file in a fresh staging dir of data/ → its manifest entry, or none
-    (and no staging dir) when it holds no row. Uncommitted stagings
-    are invisible orphans :func:`remove_orphan_files` reclaims."""
+    """Stage row addresses or delete keys as one file in a fresh
+    staging dir of data/ → its manifest entry, or none (and no staging
+    dir) when it holds no row. Uncommitted stagings are invisible
+    orphans :func:`remove_orphan_files` reclaims."""
     entries = _write_data_files(df.repartition(1), path, [])
     staged = [e for e in entries if e["rows"]]
     if entries and not staged:
@@ -1474,15 +1475,24 @@ def _stage(df: DataFrame, path: str) -> list[dict]:
     return staged
 
 
-def _addressed_files(path: str, rel: str) -> set[str]:
-    """Table-relative data files a position-delete file addresses.
-    Delete files are kilobyte-scale: reading the column back on the
-    driver is metadata-cheap."""
-    col = pq.read_table(_data_path(path, rel), columns=["file_path"])
-    return {
-        _rel_path(path, fp)
-        for fp in col.column("file_path").unique().to_pylist()
-    }
+def _select(
+    rows: DataFrame,
+    predicate: str | None,
+    keys: DataFrame | None,
+    hit: bool,
+) -> DataFrame:
+    """The rows a DML statement hits (``hit=True``) or keeps: where
+    ``(predicate) = TRUE`` — SQL DELETE semantics, FALSE and NULL keep
+    the row — or whose key is in the one-column ``keys`` (a broadcast
+    semi/anti join: only the keys travel, never the table side)."""
+    from pyspark.sql import functions as F
+
+    if predicate is not None:
+        return rows.where(
+            f"({predicate}) = TRUE" if hit else f"({predicate}) IS NOT TRUE"
+        )
+    how = "left_semi" if hit else "left_anti"
+    return rows.join(F.broadcast(keys), keys.columns, how)
 
 
 def _address(
@@ -1493,13 +1503,17 @@ def _address(
     prune: tuple[str, object, object] | None,
     predicate: str | None = None,
     keys: DataFrame | None = None,
+    stage: bool = True,
 ) -> _Hits:
-    """The addressing step of every row-level DML op: the rows of
-    snapshot ``cur`` (manifest ``m``) in files :func:`plan_files`
-    keeps under ``prune`` where ``(predicate) = TRUE`` — SQL DELETE
-    semantics, FALSE and NULL keep the row — or whose key is in the
-    one-column ``keys`` (a broadcast semi-join: only the keys travel,
-    never the table side), staged as one position-delete file."""
+    """The addressing step of every row-level DML op: the hit rows
+    (:func:`_select`) of snapshot ``cur`` (manifest ``m``) in the files
+    :func:`plan_files` keeps under ``prune``. With ``stage``, their
+    (file_path, pos) are staged as one position-delete file for a
+    merge-on-read commit; a copy-on-write op, which rewrites instead,
+    only scans them. Either way the row count and the touched files
+    ride that one job as observed metrics: the driver receives one
+    path per touched file, never a row address."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     candidates = plan_files(path, cur, prune=prune)
@@ -1508,86 +1522,93 @@ def _address(
     rows = _address_and_filter(
         spark, _reader(spark, m).parquet(*sorted(candidates)), path, m
     )
-    if predicate is not None:
-        rows = rows.where(f"({predicate}) = TRUE")
+    obs = Observation(f"dml_{uuid.uuid4().hex}")
+    hits = (
+        _select(rows, predicate, keys, hit=True)
+        .select(F.col("__fp").alias("file_path"), F.col("__pos").alias("pos"))
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.collect_set("file_path").alias("files"),
+        )
+    )
+    staged: list[dict] = []
+    if stage:
+        staged = _stage(hits, path)
     else:
-        rows = rows.join(F.broadcast(keys), keys.columns, "left_semi")
-    staged = _stage(
-        rows.select(
-            F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
+        hits.write.format("noop").mode("overwrite").save()
+    return _Hits(
+        len(candidates),
+        staged,
+        int(obs.get["rows"]),
+        frozenset(_rel_path(path, fp) for fp in obs.get["files"]),
+    )
+
+
+def _rewrite(
+    spark: SparkSession,
+    path: str,
+    m: dict,
+    hits: _Hits,
+    predicate: str | None = None,
+    keys: DataFrame | None = None,
+    like: DataFrame | None = None,
+) -> tuple[list[dict], list[dict]]:
+    """The copy-on-write half of a DML op on manifest ``m``: rewrite
+    only the touched files, keeping the rows the addressing step did
+    not hit (the same ``predicate`` or ``keys`` with the selection
+    inverted) → (kept entries, rewritten entries). ``like``, an empty
+    frame, gives the rewrite its schema."""
+    if not hits.touched:
+        return m["files"], []
+    base = _apply_delete_files(
+        spark,
+        _reader(spark, m).parquet(
+            *[_data_path(path, p) for p in sorted(hits.touched)]
         ),
         path,
+        m,
     )
-    touched: set[str] = set()
-    for e in staged:
-        touched |= _addressed_files(path, e["path"])
-    return _Hits(
-        len(candidates), staged, sum(e["rows"] for e in staged),
-        frozenset(touched),
-    )
+    rows = _select(base, predicate, keys, hit=False)
+    if like is not None:
+        rows = like.unionByName(rows, allowMissingColumns=True)
+    kept = [e for e in m["files"] if e["path"] not in hits.touched]
+    return kept, _write_data_files(rows, path, m.get("stat_cols") or [])
 
 
 def _commit_dml(
-    spark: SparkSession,
     path: str,
     ref: str,
     cur: int,
     m: dict,
     operation: str,
-    hits: _Hits,
-    rewrite: bool = False,
-    updates: DataFrame | None = None,
-    new: list[dict] | None = None,
+    files: list[dict] | None = None,
+    added: list[dict] | None = None,
+    dels: list[dict] | None = None,
+    schema: str | None = None,
     batch_id: int | None = None,
 ) -> int:
     """Commit a row-level DML op onto parent ``cur`` (manifest ``m``)
-    → new snapshot id. Merge-on-read (``rewrite=False``) adds the
-    staged delete file to the live ones. Copy-on-write applies it
-    instead: only the touched files are rewritten, through
-    :func:`_apply_delete_files`, the staged file is removed, and the
-    kept files plus the rewrite plus the update files ``new`` commit
-    together. The schema is the parent's, or the staged ``updates``'
-    one, which a rewrite then takes too. A streaming ``batch_id`` tags
-    the commit; otherwise the chain's last one is carried forward."""
-    schema = m.get("schema")
-    if updates is not None:
-        schema = updates.schema.simpleString()
-    evolved = bool(m.get("schema_evolved")) or schema != m.get("schema")
-    files, added, dels = m["files"], list(new or []), hits.staged
-    if rewrite:
-        dels = []
-        if hits.touched:
-            applied = (m.get("delete_files") or []) + hits.staged
-            kept_rows = _apply_delete_files(
-                spark,
-                _reader(spark, m).parquet(
-                    *[_data_path(path, p) for p in sorted(hits.touched)]
-                ),
-                path,
-                {**m, "delete_files": applied},
-            )
-            if updates is not None:
-                kept_rows = updates.where("1 = 0").unionByName(
-                    kept_rows, allowMissingColumns=True
-                )
-            files = [e for e in files if e["path"] not in hits.touched]
-            added = (
-                _write_data_files(kept_rows, path, m.get("stat_cols") or [])
-                + added
-            )
-        for e in hits.staged:
-            shutil.rmtree(os.path.dirname(_data_path(path, e["path"])))
+    → new snapshot id: the parent's data files (or the ``files`` a
+    rewrite kept) plus ``added``, the live delete files plus ``dels``,
+    under the parent's schema or the widened ``schema``. A streaming
+    ``batch_id`` tags the commit; otherwise the chain's last one is
+    carried forward."""
+    schema = schema or m.get("schema")
+    files = m["files"] if files is None else files
+    added = added or []
     manifest = {
         "operation": operation,
         "schema": schema,
         "stat_cols": m.get("stat_cols") or [],
-        "schema_evolved": evolved,
+        "schema_evolved": bool(m.get("schema_evolved"))
+        or schema != m.get("schema"),
         "files": files + added,
         "added": [e["path"] for e in added],
     }
-    # CoW keeps the live deletes: entries addressing rewritten (now
-    # dead) files are inert, entries addressing kept files still apply
-    dels = (m.get("delete_files") or []) + dels
+    # a rewrite keeps the live deletes: entries addressing rewritten
+    # (now dead) files are inert, entries addressing kept files apply
+    dels = (m.get("delete_files") or []) + (dels or [])
     if dels:
         manifest["delete_files"] = dels
     batch = (
@@ -1616,15 +1637,19 @@ def _merge(
     from pyspark.sql import functions as F
 
     cur, m = _dml_head(path, ref)
-    if rewrite:
+    if rewrite and m["files"]:
         # a copy-on-write merge writes one schema: the union of the
         # table's and the updates' (types widened, missing columns
-        # NULL), as one write of rewrite and updates together would
-        updates = (
-            read_snapshot(spark, path, cur)
-            .where("1 = 0")
-            .unionByName(updates, allowMissingColumns=True)
-        )
+        # NULL), as one write of rewrite and updates together would.
+        # The table's schema comes from footers, not the recorded
+        # string, which cannot carry names like "a b": one footer
+        # unless the schema evolved. The false filter makes the empty
+        # side a local relation the optimizer drops from the union.
+        paths = [_data_path(path, e["path"]) for e in m["files"]]
+        if not m.get("schema_evolved"):
+            paths = paths[:1]
+        table = _reader(spark, m).parquet(*paths).where("1 = 0")
+        updates = table.unionByName(updates, allowMissingColumns=True)
     obs = Observation(f"merge_{uuid.uuid4().hex}")
     new = _write_data_files(
         updates.observe(
@@ -1634,16 +1659,29 @@ def _merge(
         m.get("stat_cols") or [],
     )
     lo, hi = obs.get["lo"], obs.get["hi"]
-    hits = _NO_HITS
+    hits, keys = _NO_HITS, None
     if lo is not None:
         keys = spark.read.parquet(
             *[_data_path(path, e["path"]) for e in new]
         ).select(key_col)
-        hits = _address(spark, path, cur, m, (key_col, lo, hi), keys=keys)
-    sid = _commit_dml(
-        spark, path, ref, cur, m, "merge" if rewrite else "merge-mor", hits,
-        rewrite=rewrite, updates=updates, new=new, batch_id=batch_id,
-    )
+        hits = _address(
+            spark, path, cur, m, (key_col, lo, hi), keys=keys,
+            stage=not rewrite,
+        )
+    schema = updates.schema.simpleString()
+    if rewrite:
+        files, rewritten = _rewrite(
+            spark, path, m, hits, keys=keys, like=updates.where("1 = 0")
+        )
+        sid = _commit_dml(
+            path, ref, cur, m, "merge",
+            files=files, added=rewritten + new, schema=schema,
+        )
+    else:
+        sid = _commit_dml(
+            path, ref, cur, m, "merge-mor",
+            added=new, dels=hits.staged, schema=schema, batch_id=batch_id,
+        )
     return sid, m, hits
 
 
@@ -1658,11 +1696,16 @@ def _delete(
     """DELETE WHERE ``predicate`` in either write mode → (snapshot id,
     parent manifest, hits)."""
     cur, m = _dml_head(path, ref)
-    hits = _address(spark, path, cur, m, prune, predicate=predicate)
-    sid = _commit_dml(
-        spark, path, ref, cur, m, "delete" if rewrite else "delete-mor",
-        hits, rewrite=rewrite,
+    hits = _address(
+        spark, path, cur, m, prune, predicate=predicate, stage=not rewrite
     )
+    if rewrite:
+        files, rewritten = _rewrite(spark, path, m, hits, predicate=predicate)
+        sid = _commit_dml(
+            path, ref, cur, m, "delete", files=files, added=rewritten
+        )
+    else:
+        sid = _commit_dml(path, ref, cur, m, "delete-mor", dels=hits.staged)
     return sid, m, hits
 
 
@@ -1688,12 +1731,8 @@ def delete_keys_mor(
         {**e, "kind": "eq", "col": key_col}
         for e in _stage(keys.select(key_col).distinct(), path)
     ]
-    n_keys = sum(e["rows"] for e in staged)
-    sid = _commit_dml(
-        spark, path, ref, cur, m, "delete-mor",
-        _Hits(0, staged, n_keys, frozenset()),
-    )
-    return {"snapshot_id": sid, "keys": n_keys}
+    sid = _commit_dml(path, ref, cur, m, "delete-mor", dels=staged)
+    return {"snapshot_id": sid, "keys": sum(e["rows"] for e in staged)}
 
 
 def delete_where_mor(
@@ -1777,20 +1816,19 @@ def merge_into(
     matched key are rewritten.
 
     Copy-on-write is :func:`merge_into_mor`'s addressing step with the
-    deletes applied in the same commit:
+    matched rows removed in the same commit:
 
     1. the updates are staged once; manifest min/max pruning on their
        key range picks the candidate files — the rest keep their
        manifest entries and their bytes are never read;
     2. a broadcast semi-join of the candidates against the update keys
-       stages the matched rows' addresses as a position-delete file.
-       Candidates with overlapping stats but no matched key are kept
-       verbatim (this bounds write amplification when key ranges
-       overlap loosely);
-    3. the files that delete file addresses are rewritten without
-       those rows, the delete file is dropped, and the kept files +
-       rewritten files + update files commit as one ``merge``
-       snapshot.
+       finds the files holding a matched row. Candidates with
+       overlapping stats but no matched key are kept verbatim (this
+       bounds write amplification when key ranges overlap loosely);
+    3. those files are rewritten through a broadcast anti-join on the
+       update keys, and the kept files + rewritten files + update
+       files commit as one ``merge`` snapshot. Driver-side state is
+       the key (lo, hi) pair plus one path per touched file.
 
     Like compaction, a merge is not an append: :func:`incremental_read`
     refuses to traverse it. Streaming batch ids are carried forward so
@@ -1818,16 +1856,16 @@ def delete_where(
 ) -> dict:
     """Row-level ``DELETE FROM t WHERE predicate`` as a copy-on-write
     commit on main: :func:`delete_where_mor`'s addressing step with the
-    deletes applied in the same commit. Optional manifest min/max
+    hit rows removed in the same commit. Optional manifest min/max
     pruning (``prune=(col, lo, hi)``) keeps files whose stats can't
-    hold a matching row verbatim, unread; the scan of the rest stages
-    the addresses of rows where the predicate is TRUE, and only the
-    files holding one are rewritten, without those rows. Candidates
-    whose stats overlap but hold no matching row keep their manifest
-    entries untouched.
+    hold a matching row verbatim, unread; the scan of the rest finds
+    the files holding a row where the predicate is TRUE, and only
+    those are rewritten, keeping their rows where it is not. Candidates whose stats overlap but hold no matching row keep
+    their manifest entries untouched.
 
     SQL DELETE semantics on NULLs: a row is deleted iff the predicate
-    is TRUE — rows where it evaluates FALSE **or NULL** are kept.
+    is TRUE — rows where it evaluates FALSE **or NULL** are kept (the
+    rewrite filters on ``(predicate) IS NOT TRUE``).
 
     Commits a ``delete`` snapshot; like merge/replace it breaks the
     append-only change feed, carries the streaming batch id forward,
@@ -2119,7 +2157,11 @@ def snapshot_diff(
             s = int(d_by[dp].get("seq") or 0)
             eq_min_seq = s if eq_min_seq is None else min(eq_min_seq, s)
             continue
-        touched |= _addressed_files(path, dp)
+        fps = pq.read_table(_data_path(path, dp), columns=["file_path"])
+        touched |= {
+            _rel_path(path, fp)
+            for fp in fps.column("file_path").unique().to_pylist()
+        }
     re_scan = touched & pa & pb
     if eq_min_seq is not None:
         # missing seq = pre-feature file = 0, shadowed by every eq

@@ -305,3 +305,35 @@ def test_cell_ids_are_catalyst(spark):
     assert any("Generate" in p for p in plans)  # the ring explode ran
     for p in plans:
         assert not any(n in p for n in _PYTHON_EVAL), p
+
+
+def test_cow_delete_broadcasts_no_row_address(spark, tmp_path):
+    """A copy-on-write DELETE finds the touched files in one scan and
+    rewrites them with the predicate inverted: no plan it runs
+    broadcasts a row-address set, so a bulk delete needs neither
+    driver memory nor broadcast size in proportion to the rows hit."""
+    from kblock_spark.io.tableformat import (
+        delete_where,
+        overwrite_snapshot,
+        read_snapshot,
+    )
+
+    path = str(tmp_path / "t")
+    overwrite_snapshot(
+        spark.range(0, 400).repartitionByRange(4, "id"), path,
+        stat_cols=["id"],
+    )
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        it = store.executionsList().iterator()
+        while it.hasNext():
+            e = it.next()
+            yield e.executionId(), e.physicalPlanDescription()
+
+    seen = max((i for i, _ in executions()), default=-1)
+    res = delete_where(spark, path, "id % 2 = 0")
+    plans = [p for i, p in executions() if i > seen]
+    assert res["rows_deleted"] == 200 and res["files_rewritten"] == 4
+    assert plans and not any("BroadcastExchange" in p for p in plans), plans
+    assert read_snapshot(spark, path).count() == 200

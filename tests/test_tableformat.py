@@ -905,3 +905,28 @@ def test_merge_manifest_records_evolved_schema(spark, tmp_path):
     tbl = read_snapshot(spark, t)
     assert tbl.count() == 15
     assert "extra" in tbl.columns
+
+
+def test_merge_keeps_column_names_outside_identifier_syntax(spark, tmp_path):
+    """A copy-on-write merge keeps columns whose names are not plain
+    identifiers: the recorded schema string cannot carry "n chars" or
+    "a:b", so the union schema must come from the files."""
+    from kblock_spark.io.tableformat import merge_into
+
+    t = str(tmp_path / "tbl")
+    base = _df(spark, 0, 10).select(
+        "doc_id", F.col("v").alias("n chars"), F.lit(1).cast("long").alias("a:b")
+    )
+    append_snapshot(base.coalesce(1), t, stat_cols=["doc_id"])
+    ups = _df(spark, 5, 12).select(
+        "doc_id", F.lit(-1).cast("long").alias("n chars")
+    )
+    assert merge_into(spark, t, ups, "doc_id")["files_rewritten"] == 1
+    got = {
+        r["doc_id"]: (r["n chars"], r["a:b"])
+        for r in read_snapshot(spark, t).collect()
+    }
+    assert got == {
+        **{k: (k * 7 % 100, 1) for k in range(5)},
+        **{k: (-1, None) for k in range(5, 12)},
+    }
