@@ -37,6 +37,7 @@ import shutil
 import time
 import uuid
 
+from collections.abc import Sequence
 from typing import NamedTuple
 from urllib.parse import unquote
 
@@ -308,6 +309,124 @@ def _commit(
     return sid
 
 
+# ------------------------------------------------------------ commits
+# Every commit kind derives its manifest from its parent's under ONE
+# rule set (:func:`_next_manifest`) — as the Iceberg spec derives each
+# snapshot's metadata from its parent's — and goes through ONE commit
+# helper (:func:`_commit_next`).
+
+
+def _head(path: str, ref: str = "main") -> tuple[int | None, dict]:
+    """Head snapshot id of ``ref`` and its manifest ({} when empty)."""
+    sid = ref_head(path, ref)
+    return sid, ({} if sid is None else read_manifest(path, sid))
+
+
+def _live_head(path: str, ref: str = "main") -> tuple[int, dict]:
+    sid, m = _head(path, ref)
+    if sid is None:
+        raise FileNotFoundError(f"no snapshot on ref {ref!r} in {path}")
+    return sid, m
+
+
+def _next_manifest(
+    parent: dict,
+    operation: str,
+    keep: list[dict] | None = None,
+    wrote: Sequence[dict] = (),
+    dels: Sequence[dict] = (),
+    schema: str | None = None,
+    stat_cols: list[str] | None = None,
+    spec: list[dict] | None = None,
+    batch_id: int | None = None,
+    **extra,
+) -> dict:
+    """The manifest ``operation`` commits on top of ``parent`` ({} for
+    a new table). Each policy is decided here once, for every op:
+
+    - files: the parent's data files, or only the ``keep`` ones, plus
+      the entries the op ``wrote`` (``_commit`` seq-stamps them);
+    - schema: of the rows written, or the parent's if the op wrote
+      none. The snapshot is ``schema_evolved`` (readers merge footers)
+      only if it keeps a parent file and the parent was evolved or the
+      schema changed; an op that keeps none wrote every file itself;
+    - delete files: the parent's live ones plus ``dels``. An op that
+      keeps no parent file carries none: its rewrite applied them;
+    - spec: the parent's, unless the op sets one, which takes the next
+      spec id (``[]`` reverts to unpartitioned and keeps the counter);
+    - stat columns: the op's, else the parent's;
+    - batch id: the op's own (a streaming sink's, rollback's pin),
+      else the parent's, so a replayed micro-batch stays committed
+      through any later op and any expiry.
+
+    ``extra`` keys (``cherry_picked_from``, ``rollback_of``,
+    ``sort_order``) describe this commit only."""
+    kept = (parent.get("files") or []) if keep is None else keep
+    schema = schema or parent.get("schema")
+    if stat_cols is None:
+        stat_cols = parent.get("stat_cols")
+    evolved = bool(parent.get("schema_evolved")) or schema != parent.get(
+        "schema"
+    )
+    manifest = {
+        "operation": operation,
+        **extra,
+        "schema": schema,
+        "stat_cols": stat_cols or [],
+        "schema_evolved": bool(kept) and evolved,
+        "files": kept + list(wrote),
+        "added": [e["path"] for e in wrote],
+    }
+    # live deletes address immutable files: they cannot hit rows
+    # written later, and entries addressing a file the op dropped are
+    # inert
+    dels = ((parent.get("delete_files") or []) if kept else []) + list(dels)
+    if dels:
+        manifest["delete_files"] = dels
+    spec_id = int(parent.get("spec_id") or 0)
+    if spec is None:
+        spec = parent.get("spec")
+    else:
+        spec_id += 1
+    if spec:
+        manifest["spec"] = spec
+    if spec_id:
+        manifest["spec_id"] = spec_id
+    batch = parent.get("batch_id") if batch_id is None else batch_id
+    if batch is not None:
+        manifest["batch_id"] = int(batch)
+    return manifest
+
+
+def _commit_next(
+    path: str,
+    operation: str,
+    base: tuple[int | None, dict] | None = None,
+    ref: str = "main",
+    retries: int = 0,
+    **change,
+) -> int:
+    """Commit ``operation``'s :func:`_next_manifest` on ``ref`` → new
+    snapshot id. An op anchored to the head it read passes ``base`` =
+    (that head's id, the manifest to derive from) and fails fast on a
+    lost race. An op whose effect commutes (append, cherry-pick)
+    passes none: it derives against the live head and, having lost a
+    race, re-derives against the new one up to ``retries`` times — its
+    data files are written once, only the metadata commit retries
+    (Iceberg's ``commit.retry.num-retries``)."""
+    attempt = 0
+    while True:
+        parent, m = base or _head(path, ref)
+        try:
+            return _commit(
+                path, _next_manifest(m, operation, **change), parent, ref=ref
+            )
+        except CommitConflict:
+            attempt += 1
+            if base is not None or attempt > retries:
+                raise
+
+
 def _partition_expr(df: DataFrame, spec: list[dict]):
     """Partition-transform columns for a spec. The derived columns are
     COPIES (``__p_<col>``), so ``partitionBy`` strips only the copy and
@@ -360,16 +479,21 @@ def _rel_path(path: str, file_path: str) -> str:
 def _write_data_files(
     df: DataFrame,
     path: str,
-    stat_cols: list[str],
-    spec: list[dict] | None = None,
-    spec_id: int = 0,
+    stat_cols: list[str] | None,
+    head: dict | None = None,
 ) -> list[dict]:
     """Write ``df`` into a unique staging subdir of data/ and return
-    manifest entries for the files produced. Files are immutable once
-    written; uncommitted stagings are invisible orphans. Under a
-    partition spec the write is hive-laid-out by the transform copies
-    and every entry records its partition tuple + spec id (Iceberg:
-    each data file is tagged with the spec it was written under)."""
+    manifest entries for the files produced, with min/max stats of
+    ``stat_cols`` (default: the ``head`` manifest's). Files are
+    immutable once written; uncommitted stagings are invisible
+    orphans. Under the partition spec of ``head`` the write is
+    hive-laid-out by the transform copies and every entry records its
+    partition tuple + spec id (Iceberg: each data file is tagged with
+    the spec it was written under); rewrites pass no head."""
+    head = head or {}
+    stat_cols = (head.get("stat_cols") if stat_cols is None else stat_cols) or []
+    spec = head.get("spec")
+    spec_id = int(head.get("spec_id") or 0)
     sub = _data_path(path, os.path.join("data", uuid.uuid4().hex))
     if spec:
         pdf, pnames = _partition_expr(df, spec)
@@ -433,71 +557,13 @@ def append_snapshot(
     ``ref`` commits to a BRANCH head instead of ``current`` — the
     write side of the write-audit-publish pattern
     (:func:`create_branch` / :func:`publish_branch`)."""
-    schema = df.schema.simpleString()
-    parent0 = ref_head(path, ref)
-    spec: list[dict] = []
-    spec_id = 0
-    if parent0 is not None:
-        m0 = read_manifest(path, parent0)
-        if stat_cols is None:
-            stat_cols = m0.get("stat_cols")
-        spec = m0.get("spec") or []
-        spec_id = int(m0.get("spec_id") or 0)
-    stat_cols = stat_cols or []
-    new = _write_data_files(df, path, stat_cols, spec=spec, spec_id=spec_id)
-    return _commit_append(
-        path, new, schema, stat_cols, ref, commit_retries,
-        spec=spec, spec_id=spec_id, batch_id=batch_id,
+    _, head = _head(path, ref)
+    new = _write_data_files(df, path, stat_cols, head=head)
+    return _commit_next(
+        path, "append", ref=ref, retries=commit_retries, wrote=new,
+        schema=df.schema.simpleString(), stat_cols=stat_cols,
+        batch_id=batch_id,
     )
-
-
-def _commit_append(
-    path: str,
-    new: list[dict],
-    schema: str,
-    stat_cols: list[str],
-    ref: str,
-    commit_retries: int,
-    spec: list[dict] | None = None,
-    spec_id: int = 0,
-    batch_id: int | None = None,
-) -> int:
-    """Commit already-written data files ``new`` as an APPEND snapshot
-    on ``ref``: the head's files plus ``new``, re-read on every retry
-    so a lost race re-bases metadata only."""
-    for attempt in range(commit_retries + 1):
-        parent = ref_head(path, ref)
-        m = read_manifest(path, parent) if parent is not None else {}
-        manifest = {
-            "operation": "append",
-            "schema": schema,
-            "stat_cols": stat_cols,
-            # a schema change (e.g. added column) marks the chain
-            # evolved: readers then merge footers so old files surface
-            # the new columns as NULL (Iceberg add-column semantics)
-            "schema_evolved": parent is not None
-            and (bool(m.get("schema_evolved")) or m.get("schema") != schema),
-            "files": (m.get("files") or []) + new,
-            "added": [e["path"] for e in new],
-        }
-        # position deletes survive appends: they address explicit
-        # immutable files, so they can't hit the new rows
-        if m.get("delete_files"):
-            manifest["delete_files"] = m["delete_files"]
-        if spec:
-            manifest["spec"] = spec
-            manifest["spec_id"] = spec_id
-        elif m.get("spec_id"):
-            # spec was reverted to unpartitioned: keep the id counter
-            manifest["spec_id"] = m["spec_id"]
-        if batch_id is not None:
-            manifest["batch_id"] = int(batch_id)
-        try:
-            return _commit(path, manifest, parent, ref=ref)
-        except CommitConflict:
-            if attempt == commit_retries:
-                raise
-    raise AssertionError("unreachable")
 
 
 def append_snapshots_split(
@@ -519,15 +585,11 @@ def append_snapshots_split(
     Repartition to 1 upstream if each snapshot must be a single file.
     Spec-less tables only (the staging layout realizes the split, not
     a table partition spec). Returns the new snapshot ids in order."""
-    head = ref_head(path, ref)
-    if head is not None:
-        hm = read_manifest(path, head)
-        if hm.get("spec"):
-            raise ValueError(
-                "append_snapshots_split requires a spec-less table"
-            )
-        if stat_cols is None:
-            stat_cols = hm.get("stat_cols")
+    _, head = _head(path, ref)
+    if head.get("spec"):
+        raise ValueError("append_snapshots_split requires a spec-less table")
+    if stat_cols is None:
+        stat_cols = head.get("stat_cols")
     stat_cols = stat_cols or []
     schema = df.drop(split_col).schema.simpleString()
     sub = _data_path(path, os.path.join("data", uuid.uuid4().hex))
@@ -545,23 +607,12 @@ def append_snapshots_split(
             if name.endswith(".parquet")
         ]
         sids.append(
-            _commit_append(
-                path, entries, schema, stat_cols, ref, commit_retries
+            _commit_next(
+                path, "append", ref=ref, retries=commit_retries,
+                wrote=entries, schema=schema, stat_cols=stat_cols,
             )
         )
     return sids
-
-
-def _carry_spec(manifest: dict, m: dict) -> dict:
-    """Copy the partition spec + id from a parent manifest onto a new
-    one (rewrite ops emit unpartitioned files — tagged with no
-    partition tuple, so planning treats them conservatively — but
-    FUTURE appends must keep partitioning by the live spec)."""
-    if m.get("spec"):
-        manifest["spec"] = m["spec"]
-    if m.get("spec_id"):
-        manifest["spec_id"] = m["spec_id"]
-    return manifest
 
 
 def set_partition_spec(path: str, spec: list[dict]) -> int:
@@ -585,26 +636,9 @@ def set_partition_spec(path: str, spec: list[dict]) -> int:
             raise ValueError("bucket transform needs 'n'")
         if t["transform"] == "truncate" and "w" not in t:
             raise ValueError("truncate transform needs 'w'")
-    cur = current_snapshot_id(path)
-    if cur is None:
-        raise FileNotFoundError(f"no current snapshot in {path}")
-    m = read_manifest(path, cur)
-    manifest = {
-        "operation": "set-spec",
-        "schema": m.get("schema"),
-        "stat_cols": m.get("stat_cols") or [],
-        "schema_evolved": bool(m.get("schema_evolved")),
-        "files": m["files"],
-        "added": [],
-        "spec": list(spec),
-        "spec_id": int(m.get("spec_id") or 0) + 1,
-    }
-    if m.get("delete_files"):
-        manifest["delete_files"] = m["delete_files"]
-    batch = last_committed_batch(path)
-    if batch is not None:
-        manifest["batch_id"] = batch
-    return _commit(path, manifest, cur)
+    return _commit_next(
+        path, "set-spec", base=_live_head(path), spec=list(spec)
+    )
 
 
 def _all_refs(path: str) -> list[str]:
@@ -738,37 +772,15 @@ def publish_branch(
         added = set(sm.get("added") or [])
         # strip the branch-time seq so _commit re-stamps with the new
         # commit's sequence (see docstring)
-        add_entries = [
-            {k: v for k, v in e.items() if k != "seq"}
-            for e in sm["files"]
-            if e["path"] in added
-        ]
-        for attempt in range(commit_retries + 1):
-            parent = current_snapshot_id(path)
-            pm = read_manifest(path, parent)
-            evolved = (
-                bool(pm.get("schema_evolved"))
-                or bool(sm.get("schema_evolved"))
-                or pm.get("schema") != sm.get("schema")
-            )
-            manifest = {
-                "operation": "append",
-                "cherry_picked_from": s_sid,
-                "schema": sm.get("schema"),
-                "stat_cols": pm.get("stat_cols") or sm.get("stat_cols") or [],
-                "schema_evolved": evolved,
-                "files": pm["files"] + add_entries,
-                "added": sorted(added),
-            }
-            if pm.get("delete_files"):
-                manifest["delete_files"] = pm["delete_files"]
-            _carry_spec(manifest, pm)
-            try:
-                last = _commit(path, manifest, parent)
-                break
-            except CommitConflict:
-                if attempt == commit_retries:
-                    raise
+        last = _commit_next(
+            path, "append", retries=commit_retries,
+            wrote=[
+                {k: v for k, v in e.items() if k != "seq"}
+                for e in sm["files"]
+                if e["path"] in added
+            ],
+            schema=sm.get("schema"), cherry_picked_from=s_sid,
+        )
     if drop:
         drop_branch(path, name)
     return last
@@ -876,9 +888,10 @@ def snapshot_as_of(path: str, ts: float, ref: str = "main") -> int:
 
 def last_committed_batch(path: str) -> int | None:
     """Most recent streaming batch id committed to the table, or None.
-    Walks the snapshot chain newest-first; micro-batch ids are
-    monotonically increasing, so the first tagged snapshot found is
-    the latest batch."""
+    Every commit carries its parent's batch id, so the head's manifest
+    holds it; the walk newest-first covers chains whose manifests do
+    not (micro-batch ids are monotonically increasing, so the first
+    tagged snapshot found is the latest batch)."""
     return _last_batch_in_chain(path, current_snapshot_id(path))
 
 
@@ -1019,10 +1032,9 @@ def rollback_to(path: str, snapshot_id: int) -> int:
 
     Streaming progress rolls back WITH the data: the manifest pins
     ``batch_id`` to the last batch in the TARGET's chain (−1 if none —
-    absence would make :func:`last_committed_batch` keep walking into
-    the undone segment through the parent link), so micro-batches the
-    rollback undid are re-admitted on replay instead of being
-    mistaken for already-committed. A rollback is not an append:
+    without a pin the rollback would inherit the undone head's), so
+    micro-batches the rollback undid are re-admitted on replay instead
+    of being mistaken for already-committed. A rollback is not an append:
     :func:`incremental_read` refuses to traverse it (content moved
     backwards — not expressible as a delta)."""
     cur = current_snapshot_id(path)
@@ -1039,22 +1051,11 @@ def rollback_to(path: str, snapshot_id: int) -> int:
             f"snapshot {snapshot_id} is not a live ancestor of current "
             f"{cur} (never existed, or expired)"
         )
-    t = read_manifest(path, snapshot_id)
     b = _last_batch_in_chain(path, snapshot_id)
-    manifest = {
-        "operation": "rollback",
-        "rollback_of": snapshot_id,
-        "schema": t.get("schema"),
-        "stat_cols": t.get("stat_cols") or [],
-        "schema_evolved": t.get("schema_evolved", False),
-        "files": t["files"],
-        "added": [],
-        "batch_id": -1 if b is None else b,
-    }
-    if t.get("delete_files"):
-        manifest["delete_files"] = t["delete_files"]
-    _carry_spec(manifest, t)
-    return _commit(path, manifest, cur)
+    return _commit_next(
+        path, "rollback", base=(cur, read_manifest(path, snapshot_id)),
+        batch_id=-1 if b is None else b, rollback_of=snapshot_id,
+    )
 
 
 def streaming_table_sink(path: str, stat_cols: list[str] | None = None):
@@ -1128,31 +1129,11 @@ def overwrite_snapshot(
 ) -> int:
     """Commit ``df`` as a full-table OVERWRITE snapshot. Old files
     stay on disk for time travel until :func:`expire_snapshots`."""
-    parent = current_snapshot_id(path)
-    spec: list[dict] = []
-    spec_id = 0
-    pm: dict = {}
-    if parent is not None:
-        pm = read_manifest(path, parent)
-        if stat_cols is None:
-            stat_cols = pm.get("stat_cols")
-        spec = pm.get("spec") or []
-        spec_id = int(pm.get("spec_id") or 0)
-    stat_cols = stat_cols or []
-    new = _write_data_files(df, path, stat_cols, spec=spec, spec_id=spec_id)
-    return _commit(
-        path,
-        _carry_spec(
-            {
-                "operation": "overwrite",
-                "schema": df.schema.simpleString(),
-                "stat_cols": stat_cols,
-                "files": new,
-                "added": [e["path"] for e in new],
-            },
-            pm,
-        ),
-        parent,
+    parent, head = _head(path)
+    new = _write_data_files(df, path, stat_cols, head=head)
+    return _commit_next(
+        path, "overwrite", base=(parent, head), keep=[], wrote=new,
+        schema=df.schema.simpleString(), stat_cols=stat_cols,
     )
 
 
@@ -1380,13 +1361,15 @@ def _address_and_filter(
     pos = [e for e in dels if e.get("kind") != "eq"]
     eq = [e for e in dels if e.get("kind") == "eq"]
     def _norm(col):
-        # plain absolute path from a file URI: the runtime's rendering
-        # of _metadata.file_path (file:/x vs file:///x) is not
-        # contractual, and a join miss would silently resurrect
-        # deleted rows — normalize BOTH sides of every address join
-        return F.regexp_replace(
-            F.regexp_replace(col, "^file:", ""), "^/+", "/"
-        )
+        # plain absolute path from a file URI, decoded as _rel_path
+        # decodes it: the runtime's rendering of _metadata.file_path
+        # (file:/x vs file:///x) is not contractual, it percent-encodes
+        # a space or '%' but leaves '+' literal (which url_decode would
+        # read as a space), and a join miss would silently resurrect
+        # deleted rows or shadow re-appended ones — every address join
+        # compares this one form
+        bare = F.regexp_replace(F.regexp_replace(col, "^file:", ""), "^/+", "/")
+        return F.url_decode(F.replace(bare, F.lit("+"), F.lit("%2B")))
 
     if pos:
         ddf = spark.read.parquet(*[_data_path(path, e["path"]) for e in pos])
@@ -1454,13 +1437,6 @@ class _Hits(NamedTuple):
 
 
 _NO_HITS = _Hits(0, [], 0, frozenset())
-
-
-def _dml_head(path: str, ref: str) -> tuple[int, dict]:
-    cur = ref_head(path, ref)
-    if cur is None:
-        raise FileNotFoundError(f"no snapshot on ref {ref!r} in {path}")
-    return cur, read_manifest(path, cur)
 
 
 def _stage(df: DataFrame, path: str) -> list[dict]:
@@ -1553,14 +1529,15 @@ def _rewrite(
     predicate: str | None = None,
     keys: DataFrame | None = None,
     like: DataFrame | None = None,
-) -> tuple[list[dict], list[dict]]:
+) -> tuple[list[dict], list[dict], str | None]:
     """The copy-on-write half of a DML op on manifest ``m``: rewrite
     only the touched files, keeping the rows the addressing step did
     not hit (the same ``predicate`` or ``keys`` with the selection
-    inverted) → (kept entries, rewritten entries). ``like``, an empty
-    frame, gives the rewrite its schema."""
+    inverted) → (kept entries, rewritten entries, schema of the
+    rewritten rows). ``like``, an empty frame, gives the rewrite its
+    schema."""
     if not hits.touched:
-        return m["files"], []
+        return m["files"], [], None
     base = _apply_delete_files(
         spark,
         _reader(spark, m).parquet(
@@ -1573,50 +1550,11 @@ def _rewrite(
     if like is not None:
         rows = like.unionByName(rows, allowMissingColumns=True)
     kept = [e for e in m["files"] if e["path"] not in hits.touched]
-    return kept, _write_data_files(rows, path, m.get("stat_cols") or [])
-
-
-def _commit_dml(
-    path: str,
-    ref: str,
-    cur: int,
-    m: dict,
-    operation: str,
-    files: list[dict] | None = None,
-    added: list[dict] | None = None,
-    dels: list[dict] | None = None,
-    schema: str | None = None,
-    batch_id: int | None = None,
-) -> int:
-    """Commit a row-level DML op onto parent ``cur`` (manifest ``m``)
-    → new snapshot id: the parent's data files (or the ``files`` a
-    rewrite kept) plus ``added``, the live delete files plus ``dels``,
-    under the parent's schema or the widened ``schema``. A streaming
-    ``batch_id`` tags the commit; otherwise the chain's last one is
-    carried forward."""
-    schema = schema or m.get("schema")
-    files = m["files"] if files is None else files
-    added = added or []
-    manifest = {
-        "operation": operation,
-        "schema": schema,
-        "stat_cols": m.get("stat_cols") or [],
-        "schema_evolved": bool(m.get("schema_evolved"))
-        or schema != m.get("schema"),
-        "files": files + added,
-        "added": [e["path"] for e in added],
-    }
-    # a rewrite keeps the live deletes: entries addressing rewritten
-    # (now dead) files are inert, entries addressing kept files apply
-    dels = (m.get("delete_files") or []) + (dels or [])
-    if dels:
-        manifest["delete_files"] = dels
-    batch = (
-        _last_batch_in_chain(path, cur) if batch_id is None else int(batch_id)
+    return (
+        kept,
+        _write_data_files(rows, path, m.get("stat_cols") or []),
+        rows.schema.simpleString(),
     )
-    if batch is not None:
-        manifest["batch_id"] = batch
-    return _commit(path, _carry_spec(manifest, m), cur, ref=ref)
 
 
 def _merge(
@@ -1636,7 +1574,7 @@ def _merge(
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    cur, m = _dml_head(path, ref)
+    cur, m = _live_head(path, ref)
     if rewrite and m["files"]:
         # a copy-on-write merge writes one schema: the union of the
         # table's and the updates' (types widened, missing columns
@@ -1668,20 +1606,17 @@ def _merge(
             spark, path, cur, m, (key_col, lo, hi), keys=keys,
             stage=not rewrite,
         )
-    schema = updates.schema.simpleString()
     if rewrite:
-        files, rewritten = _rewrite(
+        kept, rewritten, _ = _rewrite(
             spark, path, m, hits, keys=keys, like=updates.where("1 = 0")
         )
-        sid = _commit_dml(
-            path, ref, cur, m, "merge",
-            files=files, added=rewritten + new, schema=schema,
-        )
+        change = {"keep": kept, "wrote": rewritten + new}
     else:
-        sid = _commit_dml(
-            path, ref, cur, m, "merge-mor",
-            added=new, dels=hits.staged, schema=schema, batch_id=batch_id,
-        )
+        change = {"wrote": new, "dels": hits.staged}
+    sid = _commit_next(
+        path, "merge" if rewrite else "merge-mor", base=(cur, m), ref=ref,
+        schema=updates.schema.simpleString(), batch_id=batch_id, **change,
+    )
     return sid, m, hits
 
 
@@ -1695,17 +1630,22 @@ def _delete(
 ) -> tuple[int, dict, _Hits]:
     """DELETE WHERE ``predicate`` in either write mode → (snapshot id,
     parent manifest, hits)."""
-    cur, m = _dml_head(path, ref)
+    cur, m = _live_head(path, ref)
     hits = _address(
         spark, path, cur, m, prune, predicate=predicate, stage=not rewrite
     )
     if rewrite:
-        files, rewritten = _rewrite(spark, path, m, hits, predicate=predicate)
-        sid = _commit_dml(
-            path, ref, cur, m, "delete", files=files, added=rewritten
+        kept, rewritten, schema = _rewrite(
+            spark, path, m, hits, predicate=predicate
+        )
+        sid = _commit_next(
+            path, "delete", base=(cur, m), ref=ref,
+            keep=kept, wrote=rewritten, schema=schema,
         )
     else:
-        sid = _commit_dml(path, ref, cur, m, "delete-mor", dels=hits.staged)
+        sid = _commit_next(
+            path, "delete-mor", base=(cur, m), ref=ref, dels=hits.staged
+        )
     return sid, m, hits
 
 
@@ -1726,12 +1666,12 @@ def delete_keys_mor(
     by addressing files; equality deletes need the seq comparison).
     ``ref`` commits against a branch head instead of main (the
     write-audit-publish flow). Returns ``{"snapshot_id", "keys"}``."""
-    cur, m = _dml_head(path, ref)
+    cur, m = _live_head(path, ref)
     staged = [
         {**e, "kind": "eq", "col": key_col}
         for e in _stage(keys.select(key_col).distinct(), path)
     ]
-    sid = _commit_dml(path, ref, cur, m, "delete-mor", dels=staged)
+    sid = _commit_next(path, "delete-mor", base=(cur, m), ref=ref, dels=staged)
     return {"snapshot_id": sid, "keys": sum(e["rows"] for e in staged)}
 
 
@@ -1932,28 +1872,17 @@ def compact_data_files(
     append-only change feed across it (incremental_read refuses to
     traverse it), and the superseded files stay readable for time
     travel until :func:`expire_snapshots`. Streaming-commit batch ids
-    survive: :func:`last_committed_batch` keeps walking past replace
-    snapshots, so a compaction between micro-batches cannot make a
-    replayed batch commit twice."""
-    cur = current_snapshot_id(path)
-    if cur is None:
-        raise FileNotFoundError(f"no current snapshot in {path}")
-    m = read_manifest(path, cur)
+    survive: the replace carries the parent's, so a compaction between
+    micro-batches cannot make a replayed batch commit twice. Every
+    rewritten file holds the table's full (merged) schema, which the
+    replace records."""
+    cur, m = _live_head(path)
     df = read_snapshot(spark, path, cur).coalesce(int(target_files))
-    stat_cols = m.get("stat_cols") or []
-    new = _write_data_files(df, path, stat_cols)
-    batch = last_committed_batch(path)
-    manifest = {
-        "operation": "replace",
-        "schema": m.get("schema"),
-        "stat_cols": stat_cols,
-        "schema_evolved": False,
-        "files": new,
-        "added": [e["path"] for e in new],
-    }
-    if batch is not None:
-        manifest["batch_id"] = batch
-    return _commit(path, _carry_spec(manifest, m), cur)
+    new = _write_data_files(df, path, m.get("stat_cols") or [])
+    return _commit_next(
+        path, "replace", base=(cur, m), keep=[], wrote=new,
+        schema=df.schema.simpleString(),
+    )
 
 
 def zorder_data_files(
@@ -1981,10 +1910,7 @@ def zorder_data_files(
     """
     from pyspark.sql import functions as F
 
-    cur = current_snapshot_id(path)
-    if cur is None:
-        raise FileNotFoundError(f"no current snapshot in {path}")
-    m = read_manifest(path, cur)
+    cur, m = _live_head(path)
     df = read_snapshot(spark, path, cur)
     ranges = df.agg(
         *[F.min(c).cast("double").alias(f"mn_{c}") for c in cols],
@@ -2016,31 +1942,24 @@ def zorder_data_files(
         .drop("__z")
     )
     stat_cols = sorted(set(m.get("stat_cols") or []) | set(cols))
-    new = _write_data_files(clustered, path, stat_cols)
-    batch = last_committed_batch(path)
-    manifest = {
-        "operation": "replace",
-        "schema": m.get("schema"),
-        "stat_cols": stat_cols,
-        "schema_evolved": bool(m.get("schema_evolved")),
-        "sort_order": {"kind": "zorder", "cols": list(cols), "bits": bits},
-        "files": new,
-        "added": [e["path"] for e in new],
-    }
-    if batch is not None:
-        manifest["batch_id"] = batch
-    return _commit(path, _carry_spec(manifest, m), cur)
+    return _commit_next(
+        path, "replace", base=(cur, m), keep=[],
+        wrote=_write_data_files(clustered, path, stat_cols),
+        schema=clustered.schema.simpleString(), stat_cols=stat_cols,
+        sort_order={"kind": "zorder", "cols": list(cols), "bits": bits},
+    )
 
 
 def remove_orphan_files(path: str, older_than_s: float = 0.0) -> list[str]:
     """Iceberg's ``remove_orphan_files``: delete data files referenced
     by NO live snapshot — the debris a crash between the staging write
     and the ``current`` swap leaves behind (the failure
-    test_crash_before_current_swap_is_invisible stages), plus stale
-    ``.current.*`` commit temp files. Unlike :func:`expire_snapshots`
-    this keeps EVERY snapshot readable: the referenced set is the
-    union over the whole live parent chain, so time travel and
-    incremental reads are unaffected.
+    test_crash_before_current_swap_is_invisible stages), plus the
+    dot-prefixed temp files a writer that crashed mid-commit leaves in
+    ``metadata/`` (``.snap.*``, ``.ptr.*``, ``.ref-*``, ``.tag-*``).
+    Unlike :func:`expire_snapshots` this keeps EVERY snapshot
+    readable: the referenced set is the union over the whole live
+    parent chain, so time travel and incremental reads are unaffected.
 
     ``older_than_s`` guards racing in-flight writers: a staging dir
     that has been written but whose commit hasn't swapped yet looks
@@ -2095,10 +2014,7 @@ def remove_orphan_files(path: str, older_than_s: float = 0.0) -> list[str]:
     md = _meta_dir(path)
     for name in sorted(os.listdir(md)) if os.path.isdir(md) else []:
         full = os.path.join(md, name)
-        if (
-            name.startswith(".current.")
-            and now - os.path.getmtime(full) >= older_than_s
-        ):
+        if name.startswith(".") and now - os.path.getmtime(full) >= older_than_s:
             os.remove(full)
             deleted.append(os.path.relpath(full, path))
     return deleted

@@ -271,6 +271,48 @@ def test_compact_data_files_rewrites_layout_only(spark, tmp_path):
     assert read_snapshot(spark, t).count() == 100
 
 
+def test_compaction_records_the_schema_it_wrote(spark, tmp_path):
+    """Append (doc_id, v, c), append (doc_id, v), compact, append
+    (doc_id, v): column c keeps its 4 values. The compaction wrote
+    every file with c, so it must record that schema, not the head's
+    narrower one, or the next append is not marked evolved and reads
+    drop c."""
+    from kblock_spark.io.tableformat import compact_data_files
+
+    t = str(tmp_path / "tbl")
+    append_snapshot(_df(spark, 0, 4).withColumn("c", F.col("doc_id") + 100), t)
+    append_snapshot(_df(spark, 4, 8), t)
+    compact_data_files(spark, t)
+    append_snapshot(_df(spark, 8, 12), t)
+    tbl = read_snapshot(spark, t)
+    assert "c" in tbl.columns
+    got = {r["doc_id"]: r["c"] for r in tbl.collect()}
+    assert got == {k: k + 100 if k < 4 else None for k in range(12)}
+
+
+@pytest.mark.parametrize("op", ["append", "overwrite"])
+def test_stream_batch_survives_later_commit_and_expiry(spark, tmp_path, op):
+    """A commit after streaming batch 5 carries the batch id, so after
+    the tagged snapshot expires batch 5 is still committed and its
+    replay does not commit again."""
+    from kblock_spark.io.tableformat import (
+        last_committed_batch,
+        streaming_table_sink,
+    )
+
+    t = str(tmp_path / "tbl")
+    sink = streaming_table_sink(t)
+    sink(_df(spark, 0, 10), 5)
+    commit = append_snapshot if op == "append" else overwrite_snapshot
+    commit(_df(spark, 10, 20), t)
+    expire_snapshots(t, keep_last=1)
+    assert last_committed_batch(t) == 5
+    head, rows = current_snapshot_id(t), read_snapshot(spark, t).count()
+    sink(_df(spark, 0, 10), 5)  # replayed batch 5
+    assert current_snapshot_id(t) == head
+    assert read_snapshot(spark, t).count() == rows
+
+
 def test_expire_keeps_requested_history(spark, tmp_path):
     t = str(tmp_path / "tbl")
     append_snapshot(_df(spark, 0, 20), t)
@@ -558,7 +600,8 @@ def test_zorder_clustering_enables_multi_dim_pruning(spark, tmp_path):
         incremental_read(spark, t, from_snapshot=pre)
 
 
-def test_remove_orphan_files(spark, tmp_path):
+@pytest.mark.parametrize("temp", [".current.", ".snap.", ".ptr."])
+def test_remove_orphan_files(spark, tmp_path, temp):
     from kblock_spark.io.tableformat import remove_orphan_files
     from kblock_spark.io import tableformat as tf
 
@@ -567,8 +610,9 @@ def test_remove_orphan_files(spark, tmp_path):
     s2 = append_snapshot(_df(spark, 30, 70), t)
     # stage a crashed writer: data files written, commit never swapped
     tf._write_data_files(_df(spark, 70, 99), t, [])
-    # and a stale commit temp file
-    stale = os.path.join(tf._meta_dir(t), ".current.deadbeef")
+    # and a stale commit temp file (a manifest or pointer temp is what
+    # a writer that crashed inside _commit leaves)
+    stale = os.path.join(tf._meta_dir(t), f"{temp}deadbeef")
     with open(stale, "w") as f:
         f.write("9")
     n_parquet = sum(
@@ -579,7 +623,7 @@ def test_remove_orphan_files(spark, tmp_path):
     assert remove_orphan_files(t, older_than_s=3600) == []
     deleted = remove_orphan_files(t)
     assert any(d.endswith(".parquet") for d in deleted)
-    assert any(".current." in d for d in deleted)
+    assert any(temp in d for d in deleted)
     n_after = sum(
         1 for _, _, fs in os.walk(os.path.join(t, "data"))
         for n in fs if n.endswith(".parquet")
@@ -863,9 +907,16 @@ def test_expire_then_vacuum_and_walkers_survive(spark, tmp_path):
     removed = remove_orphan_files(t)
     assert read_snapshot(spark, t).count() == 40
     assert isinstance(removed, list)
-    # streaming-sink restart walks past untagged snapshots → None,
-    # not FileNotFoundError (kept 3 and 4 carry no batch_id)
-    assert last_committed_batch(t) is None
+    # every commit carries its parent's batch id, so the kept 3 and 4
+    # still hold batch 1 after the tagged snapshots expired
+    assert last_committed_batch(t) == 1
+    # a chain without batch ids walks into the cut → None, not
+    # FileNotFoundError
+    u = str(tmp_path / "untagged")
+    append_snapshot(_df(spark, 0, 5), u)
+    append_snapshot(_df(spark, 5, 10), u)
+    expire_snapshots(u, keep_last=1)
+    assert last_committed_batch(u) is None
     # rollback ancestry walk over the cut → clean ValueError
     with pytest.raises(ValueError, match="not a live ancestor"):
         rollback_to(t, 1)

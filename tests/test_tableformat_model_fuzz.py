@@ -1,7 +1,9 @@
-"""Model-based fuzz of the table-format DML surface: a random
-sequence of append / upsert / equality-delete / predicate-delete /
-rollback / compaction ops — upserts and predicate deletes both
-merge-on-read and copy-on-write — is applied to a real snapshot
+"""Model-based fuzz of every table-format commit kind: a random
+sequence of append / overwrite / upsert / equality-delete /
+predicate-delete / rollback / compaction / z-order / partition-spec
+ops — upserts and predicate deletes both merge-on-read and
+copy-on-write, specs cycling identity, bucket and unpartitioned — is
+applied to a real snapshot
 table AND to a plain in-memory dict model; after every committing op the
 merge-on-read scan must equal the model exactly. This is the test
 shape that catches cross-op interaction bugs no single-op test can
@@ -25,13 +27,21 @@ from kblock_spark.io.tableformat import (
     delete_where_mor,
     merge_into,
     merge_into_mor,
+    overwrite_snapshot,
     read_snapshot,
     rollback_to,
+    set_partition_spec,
+    zorder_data_files,
 )
 
 _OPS = [
-    "append", "upsert", "cow_upsert", "del_keys", "del_where",
-    "cow_del_where", "rollback", "compact",
+    "append", "overwrite", "upsert", "cow_upsert", "del_keys", "del_where",
+    "cow_del_where", "rollback", "compact", "zorder", "set_spec",
+]
+_SPECS = [
+    [{"col": "v", "transform": "identity"}],
+    [{"col": "doc_id", "transform": "bucket", "n": 3}],
+    [],
 ]
 _UNIQ = [0]  # distinct table dir per hypothesis example (tmp_path is
 # function-scoped, shared across examples of one test call)
@@ -61,6 +71,7 @@ def test_dml_sequences_match_model(spark, tmp_path, ops):
     model: dict[int, int] = {}
     states: dict[int, dict[int, int]] = {}
     next_key = 0
+    specs_set = 0
 
     def commit_state():
         states[current_snapshot_id(t)] = dict(model)
@@ -79,6 +90,11 @@ def test_dml_sequences_match_model(spark, tmp_path, ops):
             next_key += n
             append_snapshot(_rows_df(spark, batch), t, stat_cols=["doc_id"])
             model.update(batch)
+        elif op == "overwrite":
+            n = 3 + r % 8
+            model = {next_key + i: (next_key + i) * 5 + r % 100 for i in range(n)}
+            next_key += n
+            overwrite_snapshot(_rows_df(spark, model), t)
         elif op in ("upsert", "cow_upsert"):
             existing = sorted(model)[:: max(1, r % 5 + 1)][:5]
             fresh = [next_key + i for i in range(r % 3)]
@@ -111,6 +127,11 @@ def test_dml_sequences_match_model(spark, tmp_path, ops):
             model = dict(states[sid])
         elif op == "compact":
             compact_data_files(spark, t, target_files=2)
+        elif op == "zorder":
+            zorder_data_files(spark, t, ["doc_id", "v"], target_files=2, bits=4)
+        elif op == "set_spec":
+            set_partition_spec(t, _SPECS[specs_set % len(_SPECS)])
+            specs_set += 1
         commit_state()
         got = {
             row["doc_id"]: row["v"]
